@@ -12,7 +12,8 @@ Reference semantics (Requirements/ExamplePipelineCode.md:335-360):
   ``min_median_cycle_rows``. With minute-cadence telemetry, rows == minutes,
   so the default 10 flags stages whose typical cycle runs under 10 minutes.
 
-Both are plain aggregations — one shuffle on (stage), map-side combinable.
+Both come from one two-level aggregate (rows per cycle, then per stage):
+two map-side-combinable shuffles and one collect of a stage-sized result.
 """
 
 from __future__ import annotations
@@ -23,28 +24,26 @@ from pyspark.sql import functions as F
 MIN_CYCLES_FOR_VALID_BASELINE = 10  # EPC:347-354
 
 
-def low_cycle_counts(
-    df: DataFrame, stage_col: str, cycle_col: str, min_cycles: int = MIN_CYCLES_FOR_VALID_BASELINE
-) -> DataFrame:
-    """Per-stage distinct-cycle count + low_cycle_count flag (EPC:347-354)."""
-    return df.groupBy(stage_col).agg(
-        F.countDistinct(cycle_col).alias("n_cycles"),
-        (F.countDistinct(cycle_col) < min_cycles).alias("low_cycle_count"),
-    )
-
-
-def short_cycling_stages(
+def stage_issue_flags(
     df: DataFrame,
     stage_col: str,
     cycle_col: str,
+    min_cycles: int = MIN_CYCLES_FOR_VALID_BASELINE,
     min_median_cycle_rows: int = 10,
 ) -> DataFrame:
-    """Per-stage short-cycling flag: median cycle length below threshold.
-
-    Two aggregations: rows per (stage, cycle), then exact median per stage.
-    """
+    """Per stage, both detectors from one two-level aggregate: rows per
+    (stage, cycle), then per stage the distinct-cycle count (non-NULL
+    cycles, as countDistinct counts them) with the ``low_cycle_count`` flag
+    (EPC:347-354) and the exact median cycle length with the raw
+    ``short_cycling`` flag. The flag is raw: the caller reports it only for
+    High stages that are not ``low_cycle_count`` (EPC:356-360)."""
     per_cycle = df.groupBy(stage_col, cycle_col).agg(F.count(F.lit(1)).alias("cycle_rows"))
-    return per_cycle.groupBy(stage_col).agg(
-        F.median("cycle_rows").alias("median_cycle_rows"),
-        (F.median("cycle_rows") < min_median_cycle_rows).alias("short_cycling"),
+    return (
+        per_cycle.groupBy(stage_col)
+        .agg(
+            F.count(cycle_col).alias("n_cycles"),
+            F.median("cycle_rows").alias("median_cycle_rows"),
+        )
+        .withColumn("low_cycle_count", F.col("n_cycles") < min_cycles)
+        .withColumn("short_cycling", F.col("median_cycle_rows") < min_median_cycle_rows)
     )

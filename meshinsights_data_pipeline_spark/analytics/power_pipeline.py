@@ -10,10 +10,41 @@ Reference flow (Requirements/ExamplePipelineCode.md:104-131):
 6. _identify_power_variance_per_stage_curated (upgrade-only)  [EPC:275-332]
 7. _calculate_baseline_power_thresholds                       [EPC:456-484]
 
-Job-boundary design (SURVEY §3.3): steps 2 and 5 stay one fused lazy plan;
-steps 3/6 are applyInPandas jobs; the gating decisions (4, 6's skip rule, 7)
-collect per-stage SCALARS only — these collects are the deliberate,
-documented boundaries. No bulk data ever reaches the driver.
+Job-boundary design (SURVEY §3.3): step 2 is one window pass over the cycle
+keys, computed once by an eager ``localCheckpoint`` that every later step
+reads; step 5's per-cycle medians are checkpointed the same way for steps 6
+and 7; steps 3/6 are applyInPandas jobs; the gating decisions (4, 6's skip
+rule, 7) collect per-stage SCALARS only — these collects are the
+deliberate, documented boundaries. No bulk data ever reaches the driver.
+
+Spark jobs per step, from a traced ``fleet_ingest`` op (one device, about
+26k rows, every stage kind; 4 cores; under AQE each shuffle stage is a job
+of its own):
+
+    step                        before  after
+    filter_valid_cycles              0      3   (eager checkpoint)
+    classify_variance_raw            9      2   (paid step 2's lazy persist)
+    identify_issues                  6      3   (one two-level aggregate)
+    curate_stage_data                0      4   (eager checkpoint)
+    classify_variance_curated        5      2
+    calculate_thresholds             5      2
+    ai_classification                4      2   (weekly rows sorted on the driver)
+    total                           29     18
+
+"Before" is the lazy ``persist()`` of step 2, two aggregates + join +
+broadcast semi-join for the valid-cycle filter, two collects in step 4 and
+a curated frame recomputed by each consumer.
+
+Why ``localCheckpoint`` and not ``persist()``: a persisted frame is
+registered in the session's CacheManager and stays there after the run, so
+a second run over the same path (after its files changed) was served the
+first run's rows. A local checkpoint is not in the CacheManager, truncates
+the lineage under the later steps (step 4's aggregate over the same rows:
+0.39 s on an eagerly persisted frame, 0.35 s on the checkpoint, median of
+six runs on 4 cores), and its blocks are freed once the returned frames
+are garbage-collected. It is not fault-tolerant: the blocks live on the
+executors only, so losing an executor fails the run's later jobs instead
+of recomputing them.
 
 Canonical conditions (Architectural Options/Opus.md:513-526): thresholds run
 iff no stage is "High"; the AI step (genai/) runs iff some stage is "High"
@@ -25,10 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from meshinsights_data_pipeline_spark.analytics.issues import (
-    low_cycle_counts,
-    short_cycling_stages,
-)
+from meshinsights_data_pipeline_spark.analytics.issues import stage_issue_flags
 from meshinsights_data_pipeline_spark.analytics.curation import curate_stage_data
 from meshinsights_data_pipeline_spark.analytics.thresholds import thresholds_dict
 from meshinsights_data_pipeline_spark.analytics.variance import (
@@ -72,10 +100,9 @@ def _variance_rows_to_dict(rows) -> dict:
 class FilterValidCyclesStep(Processor):
     """EPC:156-218."""
 
-    def __init__(self, cols: Columns, min_cycle_length=4, persist: bool = True, **kw):
+    def __init__(self, cols: Columns, min_cycle_length=4, **kw):
         super().__init__(name="filter_valid_cycles", **kw)
         self.cols, self.min_cycle_length = cols, min_cycle_length
-        self.persist = persist
 
     def validate_prerequisites(self, context):
         df = self.require_raw_data(context)
@@ -83,16 +110,12 @@ class FilterValidCyclesStep(Processor):
 
     def process(self, context):
         c = self.cols
+        # Every later step runs its own jobs over these rows: computed
+        # here, once, with the lineage cut (see the module docstring for
+        # why a local checkpoint and not persist()).
         kept = filter_valid_cycles(
             context.raw_data, [c.stage, c.cycle], c.value, min_cycle_length=self.min_cycle_length
-        )
-        if self.persist:
-            # Every downstream step (variance, issues, curation) runs its own
-            # job over this frame; without persist the scan+sessionize+filter
-            # lineage recomputes per job. MEMORY_AND_DISK is spillable, so
-            # this holds at cluster scale too (measured: ~1.9x end-to-end at
-            # sf0.1 on local[32]).
-            kept = kept.persist()
+        ).localCheckpoint()
         out = context.model_copy(update={"raw_data": kept})
         out.processed_data["power.filtered"] = kept
         return out
@@ -126,29 +149,16 @@ class IdentifyIssuesStep(Processor):
 
     def process(self, context):
         c = self.cols
-        df = context.raw_data
-        low = {
-            r[c.stage]: bool(r["low_cycle_count"])
-            for r in low_cycle_counts(df, c.stage, c.cycle, self.min_cycles).collect()
-        }
-        high_stages = [
-            s for s, v in context.variance_analysis.items() if v.get("variance") == "High"
-        ]
-        issues: dict[str, list[str]] = {s: [] for s in low}
-        for s, is_low in low.items():
-            if is_low:
-                issues[s].append("low_cycle_count")
-        eligible = [s for s in high_stages if not low.get(s, False)]
-        if eligible:
-            sc = {
-                r[c.stage]: bool(r["short_cycling"])
-                for r in short_cycling_stages(
-                    df.filter(F.col(c.stage).isin(eligible)), c.stage, c.cycle
-                ).collect()
-            }
-            for s, flag in sc.items():
-                if flag:
-                    issues[s].append("short_cycling")
+        high = {s for s, v in context.variance_analysis.items() if v.get("variance") == "High"}
+        issues: dict[str, list[str]] = {}
+        for r in stage_issue_flags(context.raw_data, c.stage, c.cycle, self.min_cycles).collect():
+            s = r[c.stage]
+            if r["low_cycle_count"]:
+                issues[s] = ["low_cycle_count"]
+            elif r["short_cycling"] and s in high:
+                issues[s] = ["short_cycling"]
+            else:
+                issues[s] = []
         out = context.model_copy()
         out.issues = issues
         return out
@@ -170,9 +180,11 @@ class CurateStageDataStep(Processor):
             if not context.issues.get(s)
             and context.variance_analysis.get(s, {}).get("variance") == "Low"
         ]
+        # Materialized once: the curated re-check and the thresholds step
+        # both read it, and it is one row per cycle.
         curated = curate_stage_data(
             context.raw_data, curatable, c.stage, c.cycle, c.value, c.ts
-        )
+        ).localCheckpoint()
         out = context.model_copy()
         out.processed_data["power.curated"] = curated
         out.stages[self.name] = {"curatable_stages": sorted(map(str, curatable))}

@@ -6,8 +6,8 @@ Reference parity: src/core/pipeline.py:14-171. Same semantics:
   (pipeline.py:83-99,123-126)
 - checkpoints: snapshot of the context after each successful step
   (pipeline.py:17-19,137-140) — here the driver-side state is deep-copied
-  while DataFrame plan handles are optionally persisted (Spark-native
-  replacement for pandas deep copy; persist() is spillable and lazy)
+  while DataFrame handles are kept as they are: they are immutable plans,
+  and a checkpoint pins no cache, so it cannot serve a later run stale rows
 - run_partial: inclusive name-addressed slice, honors conditions, no
   error/checkpoint wrapper (pipeline.py:145-171)
 - error policy: stop_on_error -> re-raise; else record + continue with the
@@ -30,19 +30,12 @@ Condition = Callable[[PipelineContext], bool]
 class PipelineConfig:
     stop_on_error: bool = True
     enable_checkpoints: bool = False
-    persist_checkpointed_tables: bool = False
     log_level: str = "INFO"
 
 
-def _snapshot(context: PipelineContext, persist_tables: bool) -> PipelineContext:
+def _snapshot(context: PipelineContext) -> PipelineContext:
     """Checkpoint copy: deep-copies driver-side dicts, keeps DataFrame handles
-    (immutable lazy plans). Optionally persists tables so replay from a
-    checkpoint doesn't recompute the lineage."""
-    if persist_tables:
-        if context.raw_data is not None:
-            context.raw_data.persist()
-        for df in context.processed_data.values():
-            df.persist()
+    (immutable lazy plans)."""
     snap = context.model_copy(update={"processed_data": dict(context.processed_data)})
     for k in ("config", "stages", "issues", "thresholds", "variance_analysis",
               "ai_analysis", "execution_log", "errors", "warnings"):
@@ -95,9 +88,7 @@ class Pipeline:
             finally:
                 processor.stop_on_error = own_policy
             if self.config.enable_checkpoints:
-                self.checkpoints[processor.name] = _snapshot(
-                    context, self.config.persist_checkpointed_tables
-                )
+                self.checkpoints[processor.name] = _snapshot(context)
         return context
 
     # pipeline.py:145-171

@@ -133,11 +133,17 @@ def weekly_summary(
             F.bround(F.median(v), 0).cast("long").alias("median"),
             F.bround(F.stddev_pop(v), 0).cast("long").alias("std_dev"),
         )
-        .orderBy("_wk", "_stage")
     )
 
+    # Tiny (|weeks| x |stages| rows), so ordered on the driver rather than
+    # by a distributed sort: Spark's (week, stage) order, NULL week first
+    # (a NULL timestamp). `_stage` is never NULL after the isin filter.
+    rows = sorted(
+        agg.collect(),
+        key=lambda r: (r["_wk"] is not None, r["_wk"] or date.min, r["_stage"]),
+    )
     out: dict[str, dict[str, dict[str, int]]] = {}
-    for row in agg.collect():  # tiny: |weeks| x |stages| rows
+    for row in rows:
         out.setdefault(row["_label"], {})[row["_stage"]] = {
             "count": int(row["count"]),
             "mean": int(row["mean"]),

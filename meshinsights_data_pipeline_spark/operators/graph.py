@@ -52,6 +52,16 @@ def pagerank(
     multiply its contribution. Self-loops count like any other edge.
     ``round_to`` rounds the final rank (cross-engine float-sum hygiene);
     pass None for raw doubles.
+
+    Cache lifetime: the node roster (``materialize``) and the
+    [src, dst, _deg] edge frame are persisted and never unpersisted. The
+    returned lazy frame keeps reading them, so both stay in the session's
+    CacheManager until the session ends or the caller runs
+    ``spark.catalog.clearCache()`` after its terminal action. A later call
+    over the same input plan reuses those entries. The edge frame's
+    persist is lazy, so composing the result into a plan whose stages run
+    concurrently can race its first materialization (see
+    ``operators.barrier``).
     """
     from meshinsights_data_pipeline_spark.operators.barrier import (
         materialize as _materialize,

@@ -228,7 +228,18 @@ def latest_snapshot(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(f"{path}/_v={versions[-1]}")
 
 
-def snapshot_before(spark: SparkSession, path: str, version: int) -> DataFrame:
+def columns_ddl(df: DataFrame, cols: list[str]) -> str:
+    """DDL for ``cols`` with their types in ``df``: the key part of a
+    state schema whose keys come from the source."""
+    return ", ".join(
+        "`{}` {}".format(c.replace("`", "``"), df.schema[c].dataType.simpleString())
+        for c in cols
+    )
+
+
+def snapshot_before(
+    spark: SparkSession, path: str, version: int, schema: str | None = None
+) -> DataFrame:
     """Read the newest committed snapshot with version STRICTLY BELOW
     ``version``. This is the retry-safe read for NON-idempotent merges
     (e.g. summed counts): on a micro-batch retry the latest committed
@@ -237,14 +248,18 @@ def snapshot_before(spark: SparkSession, path: str, version: int) -> DataFrame:
     current epoch pins the input to the pre-epoch state, so the merge is
     a pure function of (previous state, batch) on every attempt.
     (``latest_snapshot`` is fine for idempotent merges like label
-    propagation, where re-merging is a no-op.)"""
+    propagation, where re-merging is a no-op.)
+
+    ``schema`` (a DDL string) skips parquet schema inference, a Spark job
+    per read; pass it when the caller knows the state's types."""
     versions = [v for v in snapshot_versions(spark, path) if v < version]
     if not versions:
         raise FileNotFoundError(
             f"no committed snapshot below _v={version} under {path}; seed "
             "with snapshot_overwrite(df, path, version=-1)"
         )
-    return spark.read.parquet(f"{path}/_v={versions[-1]}")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(f"{path}/_v={versions[-1]}")
 
 
 def zorder_value(

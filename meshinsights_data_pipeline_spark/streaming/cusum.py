@@ -70,6 +70,7 @@ def streaming_cusum_ingest(
         _cusum_round,
     )
     from meshinsights_data_pipeline_spark.sources.layout import (
+        columns_ddl,
         snapshot_before,
         snapshot_overwrite,
     )
@@ -81,7 +82,11 @@ def streaming_cusum_ingest(
         clean = _cusum_clean(
             batch_df, ts_col, keys, value_col, id_col, target, slack
         )
-        prev = snapshot_before(spark, state_dir, epoch_id).select(
+        state = snapshot_before(
+            spark, state_dir, epoch_id,
+            schema=cusum_state_schema(columns_ddl(batch_df, keys)),
+        )
+        prev = state.select(
             *keys,
             F.col("_sp").alias("_carry_p"),
             F.col("_sm").alias("_carry_m"),
@@ -105,10 +110,7 @@ def streaming_cusum_ingest(
             .filter(F.col("_rn") == 1)
             .select(*keys, F.col("_sp"), F.col("_sm"))
         )
-        untouched = (
-            snapshot_before(spark, state_dir, epoch_id)
-            .join(last.select(*keys), keys, "left_anti")
-        )
+        untouched = state.join(last.select(*keys), keys, "left_anti")
         snapshot_overwrite(last.unionByName(untouched), state_dir,
                            version=epoch_id)
 

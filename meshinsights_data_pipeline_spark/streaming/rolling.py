@@ -66,6 +66,7 @@ def streaming_rolling_ingest(
         rolling_stats,
     )
     from meshinsights_data_pipeline_spark.sources.layout import (
+        columns_ddl,
         snapshot_before,
         snapshot_overwrite,
     )
@@ -84,7 +85,11 @@ def streaming_rolling_ingest(
             F.col(id_col).alias("_id"),
             F.col(value_col).alias("_v"),
         )
-        prev = snapshot_before(spark, tail_dir, epoch_id).select(
+        schema = rolling_state_schema(
+            columns_ddl(batch_df, keys),
+            *(batch_df.schema[c].dataType.simpleString() for c in (ts_col, id_col, value_col)),
+        )
+        prev = snapshot_before(spark, tail_dir, epoch_id, schema=schema).select(
             *keys, "_ts", "_id", "_v"
         )
         merged = prev.union(batch).localCheckpoint()  # feeds scoring,

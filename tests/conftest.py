@@ -23,6 +23,7 @@ DRIVER_SUBSET = {
     "test_backward_inclusive_and_null_value",  # asof join
     "test_chain_clique_and_isolated_pair",   # connected components (both)
     "test_filter_valid_cycles_fixture",      # core pipeline + cycles
+    "test_rerun_after_rewrite_sees_new_rows_and_leaves_no_cache",  # power pipeline cache
     "test_basket_pair_stats",                # basket association
     "test_chunking_exact_split",             # corpus chunking
     "test_neardup_collapse_step",            # corpus pipeline step
@@ -45,10 +46,34 @@ DRIVER_SUBSET = {
 }
 
 
-def pytest_collection_modifyitems(config, items):
+def _collects_whole_suite(session, config) -> bool:
+    """True when every test module collected and neither -k nor a path or
+    node id narrower than this directory selects what is collected. (A
+    module that failed to collect is reported on its own; under
+    --continue-on-collection-errors the rest of the suite still runs.)"""
+    if session.testsfailed or config.option.keyword:
+        return False
+    here = os.path.dirname(os.path.abspath(__file__))
+    for arg in config.args:
+        if "::" in arg:
+            return False
+        path = os.path.abspath(os.path.join(str(config.invocation_params.dir), arg))
+        if os.path.commonpath([path, here]) != path:  # not this dir or above it
+            return False
+    return True
+
+
+def pytest_collection_modifyitems(session, config, items):
+    matched = set()
     for item in items:
         if item.name in DRIVER_SUBSET:
             item.add_marker(pytest.mark.driver)
+            matched.add(item.name)
+    missing = DRIVER_SUBSET - matched
+    if missing and _collects_whole_suite(session, config):
+        raise pytest.UsageError(
+            f"DRIVER_SUBSET names that match no collected test: {sorted(missing)}"
+        )
 
 
 @pytest.fixture(scope="session")

@@ -77,7 +77,8 @@ def test_classify_close_modes_low():
 
 def _hvac_fixture(spark):
     """FIXTURES.md F1: stage 1 low-variance, stage 2 bimodal-high, stage 3
-    low-cycle-count, plus invalid cycles (short / zero-median)."""
+    low-cycle-count, plus invalid cycles (short / zero-median); stages 4
+    (High) and 5 (Low) run short cycles."""
     rng = np.random.default_rng(42)
     rows = []
     base = datetime(2024, 1, 1)
@@ -108,6 +109,16 @@ def _hvac_fixture(spark):
     add_cycle(1, cyc, 2, [500, 505])
     cyc += 1
     add_cycle(2, cyc, 12, np.zeros(12))
+    # stage 4: 16 short (6-row) cycles alternating 300 W / 600 W -> High and
+    # short_cycling (median cycle length 6 < 10)
+    for i in range(16):
+        cyc += 1
+        add_cycle(4, cyc, 6, rng.normal(300 if i % 2 == 0 else 600, 5, 6))
+    # stage 5: 15 short (6-row) cycles tight around 800 W -> Low, so its
+    # short cycles are not reported
+    for _ in range(15):
+        cyc += 1
+        add_cycle(5, cyc, 6, rng.normal(800, 5, 6))
     return spark.createDataFrame(
         rows, "timeStamp timestamp, tstate int, energy double, cycle long"
     )
@@ -128,23 +139,62 @@ def test_power_pipeline_end_to_end(spark):
     assert va[2]["variance"] == "High", va[2]
     assert va[3]["variance"] == "Low" and "insufficient" in va[3]["reason"]  # 36 rows < 50
 
+    assert va[4]["variance"] == "High", va[4]
+    assert va[5]["variance"] == "Low", va[5]
+
     assert out.issues[3] == ["low_cycle_count"]
     assert out.issues[1] == []
+    # short_cycling is reported only for High stages (EPC:356-360): stage 4
+    # is, stage 2 (High, 12-row cycles) and stage 5 (Low, short) are not.
+    assert out.issues[4] == ["short_cycling"]
+    assert out.issues[2] == []
+    assert out.issues[5] == []
 
-    # curated contains only stage 1 (stage 2 High, stage 3 has issues)
+    # curated holds stages 1 and 5 (stages 2 and 4 High, stage 3 has issues)
     curated = out.processed_data["power.curated"]
     stages_in_curated = {r["tstate"] for r in curated.select("tstate").distinct().collect()}
-    assert stages_in_curated == {1}
+    assert stages_in_curated == {1, 5}
 
-    # thresholds: stage 1 ~500, stage 2 None (High), stage 3 None (issues->no curated rows)
+    # thresholds: stage 1 ~500, stage 5 ~800, High stages and stage 3
+    # (issues -> no curated rows) None
     assert out.thresholds[1] == pytest.approx(500, abs=10)
+    assert out.thresholds[5] == pytest.approx(800, abs=10)
     assert out.thresholds[2] is None
     assert out.thresholds[3] is None
+    assert out.thresholds[4] is None
 
     # execution log covers all six steps
     names = [e["processor"] for e in out.execution_log]
     assert names.count("filter_valid_cycles") == 1
     assert "calculate_thresholds" in names
+
+
+def test_rerun_after_rewrite_sees_new_rows_and_leaves_no_cache(spark, tmp_path):
+    """A second run over a rewritten file must read the new rows: nothing a
+    run persists may stay in the session's CacheManager, where a later plan
+    over the same path would pick it up."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    spark.catalog.clearCache()  # start from an empty cache
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    pdf = _hvac_fixture(spark).toPandas()
+    path = str(tmp_path / "telemetry.parquet")
+
+    def write(frame):
+        pq.write_table(pa.Table.from_pandas(frame, preserve_index=False), path,
+                       coerce_timestamps="us")
+
+    write(pdf)
+    first = run_power_analysis(spark.read.parquet(path))
+    assert cache.isEmpty()
+    assert set(first.variance_analysis) == {1, 2, 3, 4, 5}
+
+    write(pdf[pdf["tstate"] == 1])
+    second = run_power_analysis(spark.read.parquet(path))
+    assert cache.isEmpty()
+    assert set(second.variance_analysis) == {1}
+    assert second.variance_analysis[1]["n_samples"] == 15 * 12
 
 
 def test_curated_recheck_upgrade_only(spark):

@@ -130,3 +130,60 @@ def test_run_partial(spark):
     assert set(out.stages) == {"b", "c"}
     with pytest.raises(StopIteration):
         p.run_partial(PipelineContext(), "x", "c")
+
+
+# ---------------------------------------------------------------------------
+# Valid-cycle semantics, pinned case by case. A cycle is keyed by (stage,
+# cycle); it is valid when count(*) >= 4, median(energy) > 0 and the mode
+# > 0. The mode is the most frequent value with NULL counted as a value;
+# ties go to the smallest value, NULL sorting first. Rows whose stage or
+# cycle is NULL belong to no valid cycle.
+
+_N = None
+
+
+def _cycles_df(spark):
+    cases = {
+        # (stage, cycle): energies
+        ("a", 1): [10.0, 11.0, 11.0, 12.0],           # valid
+        ("a", 2): [5.0, 5.0, 6.0, _N],                # NULL counts: 4 rows, valid
+        ("a", 3): [_N, _N, _N, 5.0, 5.0],             # NULL is the mode: dropped
+        ("a", 4): [_N, _N, 5.0, 5.0, 5.0],            # 5.0 beats NULL: valid
+        ("b", 1): [_N, _N, 5.0, 5.0, 6.0],            # NULL ties 5.0, sorts first: dropped
+        ("b", 2): [-1.0, -1.0, 6.0, 6.0, 9.0],        # tie, smallest (-1) wins: dropped
+        ("b", 3): [2.0, 2.0, 7.0, 7.0, 1.0],          # tie, smallest (2) wins: valid
+        ("b", 4): [_N, _N, _N, _N],                   # all NULL: dropped
+        ("b", 5): [3.0, 3.0, 3.0],                    # too short: dropped
+        ("b", 6): [0.0, 0.0, 0.0, 8.0, 9.0],          # median 0: dropped
+        (_N, 1): [10.0, 10.0, 10.0, 10.0],            # NULL stage: dropped
+        ("a", _N): [10.0, 10.0, 10.0, 10.0],          # NULL cycle: dropped
+        (_N, _N): [10.0, 10.0, 10.0, 10.0],           # both NULL: dropped
+    }
+    rows = [(s, c, v, i) for i, ((s, c), vs) in enumerate(cases.items()) for v in vs]
+    return spark.createDataFrame(rows, "tstate string, cycle long, energy double, case int")
+
+
+_VALID = {("a", 1), ("a", 2), ("a", 4), ("b", 3)}
+
+
+def test_valid_cycles_null_tie_and_key_semantics(spark):
+    df = _cycles_df(spark)
+    kept = filter_valid_cycles(df, ["tstate", "cycle"], "energy", min_cycle_length=4)
+    got = {(r["tstate"], r["cycle"]) for r in kept.select("tstate", "cycle").collect()}
+    assert got == _VALID
+    # Whole cycles survive, NULL energies included.
+    assert kept.count() == 4 + 4 + 5 + 5
+    assert kept.columns == df.columns
+
+
+def test_valid_and_invalid_cycles_partition_the_input(spark):
+    from meshinsights_data_pipeline_spark.operators.valid_cycles import invalid_cycle_rows
+
+    df = _cycles_df(spark)
+    keys = ["tstate", "cycle"]
+    kept = filter_valid_cycles(df, keys, "energy", min_cycle_length=4)
+    dropped = invalid_cycle_rows(df, keys, "energy", min_cycle_length=4)
+    assert kept.count() + dropped.count() == df.count()
+    both = kept.unionByName(dropped)
+    assert both.exceptAll(df).count() == 0 and df.exceptAll(both).count() == 0
+    assert not {(r["tstate"], r["cycle"]) for r in dropped.collect()} & _VALID
