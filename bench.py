@@ -175,6 +175,7 @@ def main() -> None:
     # the warm number measures the engine.
     extras: dict[str, float] = {}
     extras_cold: dict[str, float] = {}
+    extras_failed: dict[str, str] = {}  # name -> error, for extras that raised
     try:
         from pyspark.sql import functions as F
 
@@ -203,6 +204,7 @@ def main() -> None:
         extras["power_pipeline_e2e"] = runs[1]
     except Exception as exc:  # noqa: BLE001
         print(f"bench: power pipeline failed: {exc}", file=sys.stderr)
+        extras_failed["power_pipeline_e2e"] = str(exc)
 
     # Corpus-prep Pipeline end-to-end (quality gate -> dedup -> near-dup
     # collapse -> decontamination -> PII -> quota -> split -> chunking),
@@ -232,6 +234,7 @@ def main() -> None:
         extras["corpus_pipeline_e2e"] = runs[1]
     except Exception as exc:  # noqa: BLE001
         print(f"bench: corpus pipeline failed: {exc}", file=sys.stderr)
+        extras_failed["corpus_pipeline_e2e"] = str(exc)
 
     # Events analytics Pipeline end-to-end (sessionize -> attribution ->
     # outliers -> time-weighted avg -> report) over the events table; the
@@ -260,6 +263,7 @@ def main() -> None:
         extras["events_pipeline_e2e"] = runs[1]
     except Exception as exc:  # noqa: BLE001
         print(f"bench: events pipeline failed: {exc}", file=sys.stderr)
+        extras_failed["events_pipeline_e2e"] = str(exc)
 
     # Entity-resolution end-to-end (examples/record_linkage.py composed:
     # blocked linkage -> connected components -> golden-record anti-join)
@@ -296,6 +300,7 @@ def main() -> None:
         extras["record_linkage_e2e"] = runs[1]
     except Exception as exc:  # noqa: BLE001
         print(f"bench: record linkage e2e failed: {exc}", file=sys.stderr)
+        extras_failed["record_linkage_e2e"] = str(exc)
 
     # Temporal drift monitoring end-to-end (examples/drift_monitoring.py's
     # core: per-user CUSUM changepoints -> alarm triage summary) — the
@@ -328,6 +333,7 @@ def main() -> None:
         extras["drift_monitoring_e2e"] = runs[1]
     except Exception as exc:  # noqa: BLE001
         print(f"bench: drift monitoring e2e failed: {exc}", file=sys.stderr)
+        extras_failed["drift_monitoring_e2e"] = str(exc)
 
     # Data-quality gate end-to-end (examples/data_quality.py's core: KS
     # drift + Benford conformance + token entropy/Gini over three
@@ -370,6 +376,7 @@ def main() -> None:
         extras["data_quality_e2e"] = runs[1]
     except Exception as exc:  # noqa: BLE001
         print(f"bench: data quality e2e failed: {exc}", file=sys.stderr)
+        extras_failed["data_quality_e2e"] = str(exc)
 
     # Statistical-tests end-to-end (the r15 staged anchors' composed
     # plans: Welch t + chi-square independence + lag-k ACF + JS mix
@@ -438,6 +445,7 @@ def main() -> None:
         extras["stat_tests_e2e"] = runs[1]
     except Exception as exc:  # noqa: BLE001
         print(f"bench: stat tests e2e failed: {exc}", file=sys.stderr)
+        extras_failed["stat_tests_e2e"] = str(exc)
 
     # Judge/classifier-evaluation end-to-end (the r16 staged anchors'
     # composed plans: ROC-AUC + calibration report + Cohen's kappa +
@@ -528,6 +536,7 @@ def main() -> None:
         extras["judge_eval_e2e"] = runs[1]
     except Exception as exc:  # noqa: BLE001
         print(f"bench: judge eval e2e failed: {exc}", file=sys.stderr)
+        extras_failed["judge_eval_e2e"] = str(exc)
 
     # Sketch-profile tier (r16): the constant-memory profiling pass a
     # 100 TB corpus runs instead of exact distinct/frequency/overlap —
@@ -593,6 +602,7 @@ def main() -> None:
         extras["sketch_profile_e2e"] = runs[1]
     except Exception as exc:  # noqa: BLE001
         print(f"bench: sketch profile e2e failed: {exc}", file=sys.stderr)
+        extras_failed["sketch_profile_e2e"] = str(exc)
 
     # Streaming tier: bounded-stream exact dedup over the documents table
     # (one micro-batch run, availableNow) — the §2.10 throughput signal.
@@ -653,6 +663,7 @@ def main() -> None:
             shutil.rmtree(stage_dir, ignore_errors=True)
     except Exception as exc:  # noqa: BLE001
         print(f"bench: streaming dedup failed: {exc}", file=sys.stderr)
+        extras_failed["streaming_exact_dedup_e2e"] = str(exc)
 
     # Streaming stat-ingest tier (VERDICT r14 #7, extended r16 per
     # VERDICT r15 #5): the hashed-state JSD + entropy twins over the
@@ -824,6 +835,7 @@ def main() -> None:
             shutil.rmtree(stage_dir, ignore_errors=True)
     except Exception as exc:  # noqa: BLE001
         print(f"bench: streaming stat ingest failed: {exc}", file=sys.stderr)
+        extras_failed["streaming_stat_ingest_e2e"] = str(exc)
 
     # Per-step breakdown of the corpus pipeline (same config as the e2e
     # run). The e2e number times ONE fused plan — Catalyst collapses the
@@ -1147,6 +1159,13 @@ def main() -> None:
         ],
         "parallel_batch": ["streaming_stat_ingest_e2e"],
     }
+    # Every tagged name must be an extra that ran or one recorded as failed,
+    # so a renamed or dropped extra cannot leave a stale tag in the record.
+    untagged = sorted(
+        {n for ns in extras_methodology.values() for n in ns}
+        - extras.keys() - extras_failed.keys()
+    )
+    assert not untagged, f"extras_methodology names no extra: {untagged}"
     detail = {
         "metric": "declared_query_set_total",
         "value": total,
@@ -1157,6 +1176,7 @@ def main() -> None:
         "extras": extras,
         "extras_cold": extras_cold,
         "extras_methodology": extras_methodology,
+        "extras_failed": extras_failed,
         "corpus_steps": corpus_steps,
         "step_regressions": step_regressions,
         "query_regressions": query_regressions,

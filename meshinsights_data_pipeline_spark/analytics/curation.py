@@ -35,17 +35,14 @@ def curate_stage_data(
     """Per-cycle medians for the curatable (Low-variance, issue-free) stages.
 
     Output schema: [stage, cycle, first_ts, median_<value>_cycle] — the F3
-    curated-frame shape (FIXTURES.md F3). Passing an empty stage list yields
-    an empty frame with the same schema (the reference's empty-frame
-    contract, EPC:433-437).
+    curated-frame shape (FIXTURES.md F3), in no particular row order (every
+    consumer aggregates it). Passing an empty stage list yields an empty
+    frame with the same schema (the reference's empty-frame contract,
+    EPC:433-437).
     """
     stages = list(curatable_stages)
     kept = df.filter(F.col(stage_col).isin(stages)) if stages else df.filter(F.lit(False))
-    return (
-        kept.groupBy(stage_col, cycle_col)
-        .agg(
-            F.min(ts_col).alias("first_ts"),
-            F.median(value_col).alias(f"median_{value_col}_cycle"),
-        )
-        .orderBy(stage_col, cycle_col)
+    return kept.groupBy(stage_col, cycle_col).agg(
+        F.min(ts_col).alias("first_ts"),
+        F.median(value_col).alias(f"median_{value_col}_cycle"),
     )

@@ -13,27 +13,35 @@ Reference flow (Requirements/ExamplePipelineCode.md:104-131):
 Job-boundary design (SURVEY §3.3): step 2 is one window pass over the cycle
 keys, computed once by an eager ``localCheckpoint`` that every later step
 reads; step 5's per-cycle medians are checkpointed the same way for steps 6
-and 7; steps 3/6 are applyInPandas jobs; the gating decisions (4, 6's skip
-rule, 7) collect per-stage SCALARS only — these collects are the
-deliberate, documented boundaries. No bulk data ever reaches the driver.
+and 7. Steps 3 and 6 collect each stage's values as one array and classify
+it on the driver: the arrays are bounded by the recent_n cap (at most 5000
+samples per stage) on step 3 and by the cycle count (one median per cycle)
+on step 6, so a run starts no Python worker. The gating decisions (4, 6's
+skip rule, 7) collect per-stage scalars. These collects are the deliberate,
+documented boundaries: the driver receives per-stage scalars and bounded
+per-stage arrays, never bulk rows.
 
 Spark jobs per step, from a traced ``fleet_ingest`` op (one device, about
 26k rows, every stage kind; 4 cores; under AQE each shuffle stage is a job
-of its own):
+of its own), for three successive designs:
 
-    step                        before  after
-    filter_valid_cycles              0      3   (eager checkpoint)
-    classify_variance_raw            9      2   (paid step 2's lazy persist)
-    identify_issues                  6      3   (one two-level aggregate)
-    curate_stage_data                0      4   (eager checkpoint)
-    classify_variance_curated        5      2
-    calculate_thresholds             5      2
-    ai_classification                4      2   (weekly rows sorted on the driver)
-    total                           29     18
+    step                       persist  checkpoint  driver-side
+    filter_valid_cycles              0           3            3
+    classify_variance_raw            9           2            2
+    identify_issues                  6           3            3
+    curate_stage_data                0           4            2
+    classify_variance_curated        5           2            2
+    calculate_thresholds             5           2            2
+    ai_classification                4           2            2
+    total                           29          18           16
 
-"Before" is the lazy ``persist()`` of step 2, two aggregates + join +
-broadcast semi-join for the valid-cycle filter, two collects in step 4 and
-a curated frame recomputed by each consumer.
+"persist": a lazy ``persist()`` of step 2 (paid by step 3), two aggregates
++ join + broadcast semi-join for the valid-cycle filter, two collects in
+step 4 and a curated frame recomputed by each consumer. "checkpoint":
+eager checkpoints for steps 2 and 5, one two-level aggregate for step 4,
+step 7's weekly rows sorted on the driver. "driver-side": steps 3 and 6
+classified on the driver instead of in a ``groupBy(stage).applyInPandas``
+job, and no global sort in step 5.
 
 Why ``localCheckpoint`` and not ``persist()``: a persisted frame is
 registered in the session's CacheManager and stays there after the run, so
@@ -61,7 +69,7 @@ from meshinsights_data_pipeline_spark.analytics.curation import curate_stage_dat
 from meshinsights_data_pipeline_spark.analytics.thresholds import thresholds_dict
 from meshinsights_data_pipeline_spark.analytics.variance import (
     VarianceParams,
-    classify_variance_df,
+    classify_variance_by_stage,
 )
 from meshinsights_data_pipeline_spark.core.context import PipelineContext
 from meshinsights_data_pipeline_spark.core.pipeline import Pipeline, PipelineConfig
@@ -79,22 +87,6 @@ class Columns:
 
     def __init__(self, stage="tstate", value="energy", ts="timeStamp", cycle="cycle"):
         self.stage, self.value, self.ts, self.cycle = stage, value, ts, cycle
-
-
-def _variance_rows_to_dict(rows) -> dict:
-    return {
-        r[0]: {
-            "variance": r["variance"],
-            "reason": r["reason"],
-            "n_samples": r["n_samples"],
-            "rcv": r["rcv"],
-            "n_components": r["n_components"],
-            "means": list(r["means"]) if r["means"] is not None else [],
-            "weights": list(r["weights"]) if r["weights"] is not None else [],
-            "covariances": list(r["covariances"]) if r["covariances"] is not None else [],
-        }
-        for r in rows
-    }
 
 
 class FilterValidCyclesStep(Processor):
@@ -133,9 +125,8 @@ class ClassifyVarianceRawStep(Processor):
         capped = recent_n(
             context.raw_data, MAX_RAW_SAMPLES_PER_STAGE, [c.stage], c.ts
         )
-        result = classify_variance_df(capped, c.stage, c.value, self.params)
         out = context.model_copy()
-        out.variance_analysis = _variance_rows_to_dict(result.collect())
+        out.variance_analysis = classify_variance_by_stage(capped, c.stage, c.value, self.params)
         return out
 
 
@@ -195,7 +186,7 @@ class ClassifyVarianceCuratedStep(Processor):
     """EPC:275-332: re-check only currently-Low stages on per-cycle medians;
     upgrade-only merge (Low -> High allowed, never the reverse,
     EPC:330-332). Deliberately sequential in the reference (EPC:309); here
-    it's one applyInPandas job over the (small) curated frame."""
+    one aggregate collects each stage's cycle medians."""
 
     def __init__(self, cols: Columns, params: VarianceParams | None = None, **kw):
         super().__init__(name="classify_variance_curated", **kw)
@@ -212,10 +203,9 @@ class ClassifyVarianceCuratedStep(Processor):
             s for s, v in context.variance_analysis.items() if v.get("variance") == "Low"
         ]
         recheck = curated.filter(F.col(c.stage).isin(low_stages))
-        result = classify_variance_df(
+        upgraded = classify_variance_by_stage(
             recheck, c.stage, f"median_{c.value}_cycle", self.params
         )
-        upgraded = _variance_rows_to_dict(result.collect())
         merged = dict(context.variance_analysis)
         for s, v in upgraded.items():
             if v["variance"] == "High":  # upgrade-only (EPC:330-332)

@@ -8,11 +8,15 @@ ExamplePipelineCode.md:232-238):
    components each with weight >= MIN_SIGNIFICANT_WEIGHT whose means are
    separated by >= SEPARATION_THRESHOLD * overall median.
 
-Spark-first: the per-stage fan-out (the reference used a joblib thread pool,
-EPC:265-269) is replaced by ``groupBy(stage).applyInPandas`` — the canonical
-grouped-map pattern; Spark schedules one task per stage group, so the
-parallelism code is deleted outright (SURVEY §2.9 M10). Each group is capped
-upstream by recent_n (W2) so worker memory is bounded at any scale.
+Stage fan-out: the reference classified stages in a joblib thread pool
+(EPC:265-269). Here one ``groupBy(stage)`` + ``collect_list`` aggregate
+brings each stage's values to the driver, which classifies them. Inputs are
+bounded: at most 5000 raw samples per stage (recent_n, W2; a 10-250 ms GMM
+fit, see gmm.py) and one median per cycle on the curated re-check. A
+``groupBy(stage).applyInPandas`` job costs more in Python worker start and
+Arrow round trip than the fits themselves, and AQE runs it as one task.
+Each array is sorted first, so a result depends only on the stage's
+multiset of values, not on shuffle order.
 """
 
 from __future__ import annotations
@@ -20,8 +24,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from meshinsights_data_pipeline_spark.analytics.gmm import fit_best_gmm
 
@@ -37,11 +41,13 @@ class VarianceParams:
 
 
 def classify_variance(values: np.ndarray, params: VarianceParams = VarianceParams()) -> dict:
-    """Driver/worker-side classification of one stage's samples."""
+    """Classification of one stage's samples."""
     x = np.asarray(values, dtype=np.float64)
     x = x[np.isfinite(x)]
     n = x.size
-    base = {
+    base = {  # key order is the order the AI prompt renders
+        "variance": None,
+        "reason": None,
         "n_samples": int(n),
         "rcv": None,
         "n_components": 0,
@@ -78,42 +84,25 @@ def classify_variance(values: np.ndarray, params: VarianceParams = VarianceParam
     return {**base, "variance": "Low", "reason": "unimodal / low dispersion"}
 
 
-def classify_variance_df(
+def classify_variance_by_stage(
     df: DataFrame,
     stage_col: str,
     value_col: str,
     params: VarianceParams = VarianceParams(),
-) -> DataFrame:
-    """Distributed per-stage classification: one result row per stage.
+) -> dict:
+    """``{stage: classify_variance(values)}``, ordered by stage (NULL first).
 
-    groupBy(stage).applyInPandas — Arrow-batched, one task per group.
+    Collects each stage's values to the driver, so the caller bounds the
+    rows per stage. NULL values are dropped and NaN ones not counted; a
+    NULL stage key is a stage of its own.
     """
-    from meshinsights_data_pipeline_spark.session import ensure_package_on_workers
-
-    ensure_package_on_workers(df.sparkSession)
-    stage_field = df.schema[stage_col]
-    out_schema = (
-        f"{stage_col} {stage_field.dataType.simpleString()}, variance string, reason string, "
-        "n_samples bigint, rcv double, n_components int, "
-        "means array<double>, weights array<double>, covariances array<double>"
+    rows = (
+        df.groupBy(stage_col)
+        .agg(F.collect_list(F.col(value_col).cast("double")).alias("values"))
+        .collect()
     )
-
-    def _one_stage(pdf: pd.DataFrame) -> pd.DataFrame:
-        res = classify_variance(pdf[value_col].to_numpy(), params)
-        return pd.DataFrame(
-            [
-                {
-                    stage_col: pdf[stage_col].iloc[0],
-                    "variance": res["variance"],
-                    "reason": res["reason"],
-                    "n_samples": res["n_samples"],
-                    "rcv": res["rcv"],
-                    "n_components": res["n_components"],
-                    "means": res["means"],
-                    "weights": res["weights"],
-                    "covariances": res["covariances"],
-                }
-            ]
-        )
-
-    return df.select(stage_col, value_col).groupBy(stage_col).applyInPandas(_one_stage, out_schema)
+    rows.sort(key=lambda r: (r[0] is not None, r[0]))
+    return {
+        r[0]: classify_variance(np.sort(np.asarray(r["values"], dtype=np.float64)), params)
+        for r in rows
+    }

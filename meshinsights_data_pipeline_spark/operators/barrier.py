@@ -40,3 +40,11 @@ def materialize(df: DataFrame) -> DataFrame:
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     df.count()
     return df
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist, without blocking, the RDD behind a ``localCheckpoint()``
+    frame, which ``unpersist()`` and ``clearCache()`` do not reach: it
+    otherwise waits for a driver GC. Only this frame's RDD is released, so
+    concurrent callers are safe; ``df`` is unreadable afterwards."""
+    df._jdf.logicalPlan().rdd().unpersist(False)

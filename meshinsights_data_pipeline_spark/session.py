@@ -75,7 +75,7 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via addPyFile.
 
     Any operator whose UDF closure references package modules (the
-    applyInPandas paths: variance classification, dedup, text analysis)
+    mapInPandas paths: batch LLM calls, multimodal decode and features)
     must call this first — cloudpickle serializes module functions by
     reference, so workers need the package importable regardless of the
     caller's working directory.

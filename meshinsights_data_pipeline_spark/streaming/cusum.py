@@ -64,6 +64,7 @@ def streaming_cusum_ingest(
 
     from pyspark.sql import Window
 
+    from meshinsights_data_pipeline_spark.operators.barrier import release_checkpoint
     from meshinsights_data_pipeline_spark.operators.changepoint import (
         _cusum_clean,
         _cusum_exact,
@@ -122,5 +123,6 @@ def streaming_cusum_ingest(
             idempotent_epoch_append(out, scores_dir, epoch_id)
         else:
             out.write.mode("append").parquet(scores_dir)
+        release_checkpoint(scored)  # written: free it now, not at the next GC
 
     return _process

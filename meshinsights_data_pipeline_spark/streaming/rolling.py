@@ -62,6 +62,7 @@ def streaming_rolling_ingest(
 
     from pyspark.sql import Window
 
+    from meshinsights_data_pipeline_spark.operators.barrier import release_checkpoint
     from meshinsights_data_pipeline_spark.operators.rollup import (
         rolling_stats,
     )
@@ -126,5 +127,6 @@ def streaming_rolling_ingest(
             idempotent_epoch_append(out, scores_dir, epoch_id)
         else:
             out.write.mode("append").parquet(scores_dir)
+        release_checkpoint(merged)  # written: free it now, not at the next GC
 
     return _process

@@ -24,6 +24,7 @@ DRIVER_SUBSET = {
     "test_chain_clique_and_isolated_pair",   # connected components (both)
     "test_filter_valid_cycles_fixture",      # core pipeline + cycles
     "test_rerun_after_rewrite_sees_new_rows_and_leaves_no_cache",  # power pipeline cache
+    "test_power_analysis_runs_no_python_udf",  # power pipeline, driver-side variance
     "test_basket_pair_stats",                # basket association
     "test_chunking_exact_split",             # corpus chunking
     "test_neardup_collapse_step",            # corpus pipeline step

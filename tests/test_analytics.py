@@ -223,6 +223,90 @@ def test_curated_recheck_upgrade_only(spark):
     assert out.variance_analysis[1]["variance"] == "High"
 
 
+def _stage_rows():
+    """(stage, value) rows for the per-stage classifier: a bimodal, a
+    dispersed and a tight stage, NaN and NULL values among them, a NULL
+    stage key, an all-NULL stage and one under min_samples_for_test."""
+    rng = np.random.default_rng(7)
+    rows = [("bimodal", float(v)) for v in np.r_[rng.normal(300, 5, 60), rng.normal(600, 5, 60)]]
+    rows += [("dispersed", float(v)) for v in rng.lognormal(5, 1, 80)]
+    rows += [("tight", float(v)) for v in rng.normal(500, 5, 70)]
+    rows += [("tight", float("nan")), ("tight", None), ("bimodal", None), ("dispersed", float("nan"))]
+    rows += [(None, float(v)) for v in rng.normal(200, 3, 55)] + [(None, None)]
+    rows += [("all_null", None)] * 5
+    rows += [("few", float(v)) for v in rng.normal(100, 1, 10)]
+    return rows
+
+
+def test_classify_variance_by_stage_matches_pandas(spark):
+    """The one-aggregate classifier equals ``classify_variance`` run per
+    stage in pandas over the same rows (NULL stage key kept as a stage)."""
+    import pandas as pd
+
+    from meshinsights_data_pipeline_spark.analytics.variance import classify_variance_by_stage
+
+    rows = _stage_rows()
+    df = spark.createDataFrame(rows, "stage string, value double")
+    got = classify_variance_by_stage(df, "stage", "value")
+
+    pdf = pd.DataFrame(rows, columns=["stage", "value"])
+    expect = {
+        (None if pd.isna(k) else k): classify_variance(np.sort(g["value"].to_numpy(dtype=np.float64)))
+        for k, g in pdf.groupby("stage", dropna=False)
+    }
+    assert got == expect
+    assert list(got) == [None, "all_null", "bimodal", "dispersed", "few", "tight"]
+    assert got["bimodal"]["variance"] == "High" and got["bimodal"]["n_components"] == 2
+    assert got["dispersed"]["variance"] == "High" and got["dispersed"]["reason"].startswith("high dispersion")
+    assert got["tight"]["variance"] == "Low" and got["tight"]["n_samples"] == 70
+    assert got[None]["n_samples"] == 55
+    assert got["all_null"]["n_samples"] == 0 and got["all_null"]["variance"] == "Low"
+    assert got["few"]["reason"] == "insufficient samples (10 < 50)"
+
+
+def test_classify_variance_by_stage_ignores_row_order_and_partitioning(spark):
+    """Shuffled rows and 1 or 4 partitions give the same dict, bit for bit."""
+    import random
+
+    from meshinsights_data_pipeline_spark.analytics.variance import classify_variance_by_stage
+
+    rows = _stage_rows()
+    schema = "stage string, value double"
+    df = spark.createDataFrame(rows, schema)
+    base = classify_variance_by_stage(df, "stage", "value")
+    shuffled = list(rows)
+    random.Random(3).shuffle(shuffled)
+    for variant in (
+        spark.createDataFrame(shuffled, schema),
+        df.repartition(1),
+        df.repartition(4),
+        spark.createDataFrame(shuffled, schema).repartition(4),
+    ):
+        assert classify_variance_by_stage(variant, "stage", "value") == base
+
+
+def test_power_analysis_runs_no_python_udf(spark, monkeypatch):
+    """The power path classifies on the driver: with the grouped-map and
+    map-in-pandas entry points disabled, the fixture's labels still hold."""
+    from pyspark.sql import GroupedData
+
+    df = _hvac_fixture(spark)
+
+    def no_udf(*a, **k):
+        raise AssertionError("the power analysis started a Python UDF")
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", no_udf)
+    monkeypatch.setattr(type(df), "mapInPandas", no_udf)
+    out = run_power_analysis(df)
+    assert {s: v["variance"] for s, v in out.variance_analysis.items()} == {
+        1: "Low", 2: "High", 3: "Low", 4: "High", 5: "Low"
+    }
+    assert out.issues == {1: [], 2: [], 3: ["low_cycle_count"], 4: ["short_cycling"], 5: []}
+    assert out.thresholds[1] == pytest.approx(500, abs=10)
+    assert out.thresholds[5] == pytest.approx(800, abs=10)
+    assert all(out.thresholds[s] is None for s in (2, 3, 4))
+
+
 # ---------------------------------------------------------------------------
 # Cross-validation goldens for the numpy EM (VERDICT r9 item 5): sklearn is
 # absent in this environment, so M2's BIC selection is validated two

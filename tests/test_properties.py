@@ -14,7 +14,7 @@ from collections import Counter
 from datetime import date, timedelta
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -3246,6 +3246,7 @@ def test_bootstrap_mean_ci_matches_python(spark, rows):
     ),
     p=st.tuples(st.integers(1, 9), st.integers(1, 9)),
 )
+@example(cells=[(0, 0, 1, 0)], p=(9, 9))
 @SLOW
 def test_sprt_bernoulli_matches_python(spark, cells, p):
     """llr and the boundary decisions are bit-identical to the python
@@ -3259,9 +3260,12 @@ def test_sprt_bernoulli_matches_python(spark, cells, p):
         sprt_constants,
     )
 
-    p0, p1 = p[0] / 10.0, p[1] / 10.0
-    if p0 == p1:
-        p1 = min(0.9, p0 + 0.1)
+    # equal tenths would be an untestable hypothesis pair: step the
+    # second one away from the first, downward at the 0.9 edge
+    t0, t1 = p
+    if t0 == t1:
+        t1 = t0 + 1 if t0 < 9 else t0 - 1
+    p0, p1 = t0 / 10.0, t1 / 10.0
     agg = {}
     for e, a, n, x in cells:
         agg[(f"e{e}", f"a{a}")] = (n, min(x, n))

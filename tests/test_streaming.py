@@ -2179,6 +2179,80 @@ def test_streaming_cusum_full_parity_and_scalar_state(spark, tmp_path):
     assert spark.read.parquet(o_dir).count() == n_before
 
 
+def test_streaming_twin_checkpoints_released_each_epoch(spark, tmp_path):
+    """The CUSUM and rolling twins, run concurrently through
+    ``parallel_batch``, free their local checkpoints at the end of every
+    epoch: no persisted RDD outlives an epoch, and the scores still equal
+    the batch operators over all ingested rows."""
+    from datetime import datetime, timedelta
+
+    from meshinsights_data_pipeline_spark.operators.changepoint import (
+        cusum_changepoints,
+    )
+    from meshinsights_data_pipeline_spark.operators.rollup import (
+        rolling_stats,
+    )
+    from meshinsights_data_pipeline_spark.sources.layout import (
+        snapshot_overwrite,
+    )
+    from meshinsights_data_pipeline_spark.streaming import (
+        parallel_batch,
+        streaming_cusum_ingest,
+        streaming_rolling_ingest,
+    )
+    from meshinsights_data_pipeline_spark.streaming.cusum import (
+        cusum_state_schema,
+    )
+    from meshinsights_data_pipeline_spark.streaming.rolling import (
+        rolling_state_schema,
+    )
+
+    base = datetime(2024, 1, 1)
+    schema = "user_id long, ts timestamp, event_id long, value double"
+    batches = [
+        spark.createDataFrame(
+            [(u, base + timedelta(hours=4 * e + i), u * 1000 + 4 * e + i,
+              float((u * 7 + 4 * e + i) % 11))
+             for u in (1, 2, 3) for i in range(4)], schema)
+        for e in range(5)
+    ]
+    d = {n: str(tmp_path / n) for n in ("cs", "co", "rs", "ro")}
+    snapshot_overwrite(
+        spark.createDataFrame([], cusum_state_schema()), d["cs"], -1)
+    snapshot_overwrite(
+        spark.createDataFrame([], rolling_state_schema()), d["rs"], -1)
+    cusum = dict(target=5.0, slack=0.5, threshold=8.0)
+    process = parallel_batch(
+        streaming_cusum_ingest(["user_id"], state_dir=d["cs"],
+                               scores_dir=d["co"], **cusum),
+        streaming_rolling_ingest(["user_id"], tail_dir=d["rs"],
+                                 scores_dir=d["ro"], n=3),
+    )
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    for epoch, batch in enumerate(batches):
+        before = persisted()
+        process(batch, epoch)
+        assert persisted() <= before, epoch
+
+    rows = batches[0]
+    for b in batches[1:]:
+        rows = rows.unionByName(b)
+
+    def canon(df, cols):
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    c_cols = ["user_id", "event_id", "s_plus", "s_minus", "alarm_up", "alarm_down"]
+    assert canon(spark.read.parquet(d["co"]), c_cols) == canon(
+        cusum_changepoints(rows, "ts", ["user_id"], "value", "event_id", **cusum), c_cols)
+    r_cols = ["user_id", "event_id", "roll_n", "roll_sum", "roll_avg"]
+    assert canon(spark.read.parquet(d["ro"]), r_cols) == canon(
+        rolling_stats(rows, "ts", ["user_id"], "value", "event_id", n=3), r_cols)
+
+
 def test_streaming_ks_full_parity_and_retry(spark, tmp_path):
     """KS twin: single-batch report equals the batch operator exactly;
     after a second batch the epoch-1 report equals the batch operator
