@@ -85,7 +85,7 @@ def main() -> None:
           .foreachBatch(streaming_lsh_ingest(
               doc_stream, "doc_id", "text",
               signature_dir=dirs["sigs"], pairs_dir=dirs["pairs"],
-              labels_dir=dirs["labels"], idempotent=True))
+              labels_dir=dirs["labels"]))
           .option("checkpointLocation", dirs["ckpt1"])
           .trigger(availableNow=True).start())
     emb_stream = (spark.readStream.schema(spark.read.parquet(dirs["src_emb"]).schema)
@@ -93,7 +93,7 @@ def main() -> None:
     q2 = (emb_stream.writeStream
           .foreachBatch(streaming_ivf_ingest(
               emb_stream, centroids, lists_dir=dirs["lists"],
-              vectors_dir=dirs["vecs"], idempotent=True))
+              vectors_dir=dirs["vecs"]))
           .option("checkpointLocation", dirs["ckpt2"])
           .trigger(availableNow=True).start())
     q1.awaitTermination(300)

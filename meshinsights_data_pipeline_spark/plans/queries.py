@@ -2694,192 +2694,8 @@ def _register_extensions() -> None:
 _register_extensions()
 
 
-# Round-12 window. Priority bands, per the standing rotation discipline
-# (and this round's verdict): (0) the 14 queries ADDED this round, never
-# driver-checked; (1) queries whose operator code CHANGED this round —
-# x85 (zscore NaN guard), x86 (touch_id native-type fix), x26 (star-CC
-# explode fusion + deferred node roster); (2) the full 35-query r8-stale
-# cohort, last driver-checked three rounds ago — re-verification is the
-# only proof those greens survived three rounds of shared-machinery
-# edits; (3) fill to 50 with the heaviest r9-cohort queries. The
-# remaining r9 queries (x07, x09, x10, x12, x13, x41, x52, x64, x67, x68, q21,
-# q20, q13, q11, ...) stay
-# r9-checked, so after this round no query is staler than r9. All
-# registered queries were also locally driver-sim-verified green this
-# session (.claude/skills/verify/driver_sim.py).
-_DRIVER_WINDOW_R12 = [
-    # (0) added this round
-    "x90_overlap_neardup",
-    "x91_rolling_stats",
-    "x92_mad_outliers",
-    "x93_pmi_collocations",
-    "x94_event_paths",
-    "x95_winsorize",
-    "x96_centroid_similarity",
-    "x97_record_linkage",
-    "x98_session_metrics",
-    "x99_linear_attribution",
-    "x100_decay_attribution",
-    "x101_vocab_overlap",
-    "x102_funnel_latency",
-    "x103_rfm_scores",
-    # (1) operator code changed this round. x85's NaN guard and x86's
-    # native-id-type fix also landed, but neither can alter a testdata
-    # result (no NaN values exist at any SF; event ids are already
-    # BIGINT, so the dropped cast is a no-op there) — both driver
-    # results are bit-identical to their r11 greens, so they yield
-    # their slots to the 13th/14th new queries and re-verify in r13.
-    # x26 keeps its slot: the star fusion changed the executed plan.
-    "x26_dedup_clusters_star",
-    # (2) the r8-stale cohort, in full
-    "q08", "q09", "q10",
-    "q63", "q64", "q65", "q66", "q67", "q68", "q69", "q70", "q71",
-    "q72", "q73",
-    "x24_source_quota", "x27_url_dedup", "x28_pii_redact",
-    "x30_pack_sequences", "x31_dataset_split", "x35_gap_fill",
-    "x36_profile", "x38_semantic_dedup", "x40_shuffle_shards",
-    "x42_mixture_sample", "x43_html_extract", "x44_funnel",
-    "x45_cohort_retention", "x46_numeric_profile", "x47_length_ranks",
-    "x58_dq_checks", "x59_vector_stats", "x60_skew_salted_agg",
-    "x61_grouped_percentiles", "x65_cdc_delta", "x66_state_transitions",
-    # (3) no r9-fill slots remain: the 14 queries added this round
-    # consumed the fill band (the rotation discipline gives new queries
-    # absolute priority). The r9 cohort is the r13 rotation's first
-    # claim on slots.
-]
-
-# Round-13 window (verdict r12 #1: staleness retirement — no new
-# queries this round, so the stale cohorts get the whole window).
-# Priority bands: (1) queries whose operator code CHANGED this round —
-# x90 (overlap_coefficient_pairs gained the max_doc_freq scale cap,
-# mirrored in X90_SQL) and x97 (blocked_record_linkage generalized to
-# N weighted fields; the 2-field form now routes through the N-field
-# engine). x103's approx= addition, x04's max_doc_freq= addition, and
-# x91's streaming-twin NaN-tail fix cannot alter their driver results
-# (both new parameters default to the unchanged exact path — the None
-# branch selects the identical frame; x91's batch operator is
-# untouched), so all three yield their slots to stale queries per the
-# r12 precedent; the full-suite oracle run re-verified them anyway. (2) the
-# full 39-query r9-stale cohort, last driver-checked four rounds ago.
-# (3) fill to 50 with the oldest r10 queries in the verdict's priority
-# order (q01–q07, q15, q25); x06 and x54 are the two displaced by the
-# x90/x97 code-change slots and rotate in r14. After this round no
-# query is staler than r10. All 176 registered queries were verified
-# green against the DuckDB oracle at sf0.01 by this session's full
-# pytest run, so the rotation freshens the driver RECORD, not suspected
-# rot.
-_DRIVER_WINDOW_R13 = [
-    # (1) operator code changed this round
-    "x90_overlap_neardup",
-    "x97_record_linkage",
-    # (2) the r9-stale cohort, in full
-    "q11", "q13", "q14",
-    "q16", "q17", "q18", "q19", "q20", "q21", "q22", "q23",
-    "q28", "q29", "q30", "q33",
-    "q44", "q45", "q46", "q47", "q48", "q49", "q50", "q51",
-    "q52", "q53", "q54", "q55", "q56", "q57",
-    "x07_embedding_neardup", "x09_lang_id", "x10_rp_lsh_topk",
-    "x12_embedding_neardup_lsh", "x13_multimodal_meta",
-    "x41_kmeans_update", "x52_ann_recall", "x64_scd2_merge",
-    "x67_pagerank", "x68_scd2_lookup",
-    # (3) r10 fill, verdict priority order
-    "q01", "q02", "q03", "q04", "q05", "q06", "q07", "q15", "q25",
-]
-# Round-14 window (verdict r13 #1: execute the staged rotation exactly
-# as written). Priority bands: (0) the 12 queries REGISTERED this round
-# (x104–x115 — staged + oracle-proven in r13, never driver-checked) and
-# x04, whose ANCHOR changed to the max_doc_freq=4 capped operator call
-# (operator code-change rule; at sf0.01 the capped result is identical
-# to the uncapped 25 pairs, so this re-proves the unchanged record on
-# the new code path). x105/x108 carry this round's abtest-left-join and
-# trend-cap_n code changes inside their own slots. (1) the full
-# 29-query r10-stale cohort (q12, q24, q26/q27, q31/q32, q34–q43,
-# q58–q62, x06, x15–x20, x54 — includes the x06/x54 displaced from the
-# r13 fill band), last driver-checked four rounds ago. (2) fill the 8
-# remaining slots with the heaviest r11-stale queries by recorded warm
-# bench time (re-verification value concentrates where the plans are
-# heaviest; x23 is also the r13 verdict's watch item): x23 5.18s, x79
-# 2.42s, x11 2.23s, x57 2.10s, x49 2.00s, x29 1.94s, x83 1.93s, x08
-# 1.93s. After this round no registered query is staler than r11. All
-# 176 pre-round queries were driver-sim-verified green this session
-# (.claude/skills/verify/driver_sim.py, 176/176) and the 12 new + x04
-# anchors proven by the sf0.01 oracle harness before registration.
-_DRIVER_WINDOW_R14 = [
-    # (0) registered this round + the x04 anchor change
-    "x104_cusum_changepoints",
-    "x105_ab_test",
-    "x106_exp_weighted_avg",
-    "x107_ks_drift",
-    "x108_trend",
-    "x109_benford",
-    "x110_token_entropy",
-    "x111_embedding_covariance",
-    "x112_km_survival",
-    "x113_quantile_normalize",
-    "x114_best_survivors",
-    "x115_source_dup_matrix",
-    "x04_ngram_jaccard",
-    # (1) the r10-stale cohort, in full
-    "q12", "q24", "q26", "q27", "q31", "q32",
-    "q34", "q35", "q36", "q37", "q38", "q39", "q40", "q41", "q42", "q43",
-    "q58", "q59", "q60", "q61", "q62",
-    "x06_cosine_topk", "x15_ivf_topk", "x16_asof_join",
-    "x17_interval_join", "x18_time_rollup", "x19_kusto_decode",
-    "x20_doc_chunks", "x54_zorder_keys",
-    # (2) r11 fill, heaviest recorded warm time first
-    "x23_dedup_clusters", "x79_sq_topk", "x11_minhash_dedup_pairs",
-    "x57_source_overlap", "x49_span_excision", "x29_contamination_bloom",
-    "x83_basket_lift", "x08_text_stats",
-]
-# Round-15 window (verdict r14 #1: execute the staged rotation as
-# written in drafts_r15.py). Priority bands: (0) the 8 queries
-# REGISTERED this round (x116-x123 — staged + oracle-proven in r14,
-# never driver-checked; x118/x120/x122 carry this round's advisor
-# fixes — autocorrelation/spearman single-scan materialization and the
-# mw u-mask — inside their own slots). The other operators whose code
-# changed this round cannot alter a driver result and yield their
-# slots per the r12 x85/x86 precedent: the A/B-family arm-column
-# rename is a no-op for every anchor (all pass arm_col="arm";
-# x105/x116 re-proven bit-identical by this session's driver-sim and
-# draft-oracle runs), and welch/kruskal share only that rename.
-# (1) the full 40-query r11-stale cohort, last driver-checked four
-# rounds ago (the 48 r11-checked queries minus the 8 heaviest
-# re-checked in r14: x23/x79/x11/x57/x49/x29/x83/x08 — the drafts_r15
-# docstring's "41" miscounted; the union of CORRECTNESS_r1-r14 gives
-# exactly these 40). (2) fill the 2 remaining slots with the heaviest
-# r12-stale queries by the r14 gate-run warm time: x26 3.52s, q67
-# 2.46s. After this round no registered query is staler than r12.
-# All 40+2 rotation queries were re-verified green at the driver tier
-# by this session's full driver-sim before the window landed.
-_DRIVER_WINDOW_R15 = [
-    # (0) registered this round
-    "x116_welch_ttest",
-    "x117_chi2_independence",
-    "x118_autocorrelation",
-    "x119_js_divergence",
-    "x120_mann_whitney",
-    "x121_kruskal_wallis",
-    "x122_spearman",
-    "x123_correlation_ratio",
-    # (1) the r11-stale cohort, in full
-    "x01_exact_dedup", "x02_minhash_signatures", "x03_minhash_lsh_pairs",
-    "x05_simhash", "x14_fuzzy_neardup", "x21_winnow_fingerprints",
-    "x22_gopher_quality", "x25_contamination", "x32_vocabulary",
-    "x33_tfidf_terms", "x34_repetition_signals", "x37_pq_topk",
-    "x39_boilerplate_ngrams", "x48_duplicate_spans", "x50_corpus_report",
-    "x51_lm_quality", "x53_quality_top_fraction", "x55_weighted_sample",
-    "x56_semantic_decontamination", "x62_line_dedup", "x63_source_drift",
-    "x69_gap_sessions", "x70_dsir_weights", "x71_bm25_topk",
-    "x72_binary_neardup", "x73_stratified_sample", "x74_lexical_diversity",
-    "x75_url_blocklist", "x76_chat_render", "x77_gram_novelty",
-    "x78_line_signals", "x80_temperature_mixture", "x81_triangle_counts",
-    "x82_gap_interpolate", "x84_histogram", "x85_zscore_outliers",
-    "x86_last_touch", "x87_time_weighted_avg", "x88_psi_drift",
-    "x89_windowed_dedup",
-    # (2) r12 fill, heaviest recorded warm time first
-    "x26_dedup_clusters_star", "q67",
-]
-# Round-16 window (verdict r15 #1: execute the staged rotation as
+# Driver-verification window: the first 50 entries of QUERIES, as
+# rotated in round 16 (verdict r15 #1: execute the staged rotation as
 # written in drafts_r16.py). Priority bands: (0) the 7 queries
 # REGISTERED this round (x124-x130 — staged + oracle-proven in r15,
 # never driver-checked). (1) the r12-stale cohort, recomputed from the
@@ -2893,7 +2709,7 @@ _DRIVER_WINDOW_R15 = [
 # heavy plans) to r17, which must take them first (drafts_r17
 # docstring reserves the slots). 7 + 43 = 50. After this round no
 # registered query is staler than r13 except q68/x24/x40.
-_DRIVER_WINDOW_R16 = [
+_DRIVER_WINDOW = [
     # (0) registered this round
     "x124_roc_auc",
     "x125_calibration",
@@ -2917,7 +2733,6 @@ _DRIVER_WINDOW_R16 = [
     "x99_linear_attribution", "x100_decay_attribution",
     "x101_vocab_overlap", "x102_funnel_latency", "x103_rfm_scores",
 ]
-_DRIVER_WINDOW = _DRIVER_WINDOW_R16
 
 
 def _rotate_for_driver() -> None:

@@ -116,8 +116,7 @@ def _reject_flat_table(spark: SparkSession, path: str) -> None:
             "appending _epoch= partitions to it would break partition "
             "discovery at read time. Migrate the seed first: "
             "idempotent_epoch_append(spark.read.parquet(path), new_dir, "
-            "epoch_id=-1), or pass idempotent=False to keep the legacy "
-            "flat at-least-once layout."
+            "epoch_id=-1)."
         )
 
 
@@ -193,26 +192,17 @@ def snapshot_overwrite(
                 fs.delete(st.getPath(), True)
 
 
-def snapshot_overwrite_read(
-    df: DataFrame, path: str, version: int, keep: int = 2
-) -> DataFrame:
-    """``snapshot_overwrite`` + read-back of the just-committed version.
+def snapshot_overwrite_read(df: DataFrame, path: str, version: int) -> DataFrame:
+    """``snapshot_overwrite``, then a scan of the just-committed version.
 
-    The streaming twins all need the merged state twice per epoch — once
-    for the snapshot write, once for the epoch report — and must not
-    compute the report from a plan that references the state dir being
-    overwritten. The original idiom was ``merged.localCheckpoint()``
-    (job 1) then the snapshot write (job 2) then the report (job 3).
-    The write itself is already a full materialization, so this helper
-    drops the checkpoint job: write straight from the lazy plan (job 1)
-    and hand consumers a scan of the committed ``_v=<version>`` files
-    (the report becomes job 2 over a tiny parquet read). One fewer
-    Spark job per twin per epoch, identical bytes either way (r16
-    optimization round; measured on streaming_stat_ingest_e2e — see
-    OPTIMIZATION_r16.md)."""
-    spark = df.sparkSession
-    snapshot_overwrite(df, path, version, keep=keep)
-    return spark.read.parquet(f"{path}/_v={int(version)}")
+    For a frame needed after it is written (a twin's merged state feeds
+    its epoch report): the write is the one materialization, and the
+    consumers read the committed ``_v=<version>`` files, never a plan over
+    the directory being overwritten. That is one Spark job fewer than
+    ``localCheckpoint()`` then write (OPTIMIZATION_r16.md row 8). The scan
+    takes ``df``'s own schema, so it starts no parquet-inference job."""
+    snapshot_overwrite(df, path, version)
+    return df.sparkSession.read.schema(df.schema).parquet(f"{path}/_v={int(version)}")
 
 
 def latest_snapshot(spark: SparkSession, path: str) -> DataFrame:

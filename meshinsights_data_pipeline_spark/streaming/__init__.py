@@ -4,6 +4,14 @@ The reference is batch-only; these are the north-star extension surface
 (BASELINE approach: "DataFrame ops + Structured Streaming"). Each streaming
 operator is the watermarked/stateful twin of a batch operator and is tested
 for PARITY against it via foreachBatch collection over a bounded stream.
+
+Every foreachBatch twin that carries state or appends output runs the one
+epoch of ``streaming.state.state_twin``: read each versioned state as of
+before the epoch, rewrite it as version ``epoch``, append each output under
+``_epoch=<epoch>``, release the step's local checkpoints. A retried
+micro-batch therefore replaces its own writes (exactly-once per epoch),
+and a twin supplies only the DataFrame logic of its merge and outputs,
+built on its batch operator's own count stage.
 """
 
 from meshinsights_data_pipeline_spark.streaming.ann import (

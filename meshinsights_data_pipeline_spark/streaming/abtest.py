@@ -23,13 +23,18 @@ family after Benford's. Summed counts are not re-merge-idempotent, so
 state reads use ``snapshot_before(epoch)``: a retried micro-batch
 recomputes from pre-epoch state and overwrites its own snapshot
 (the streaming_drift discipline). Report appends are exactly-once per
-epoch by default.
+epoch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+    with_epoch,
+)
 
 
 def streaming_abtest_ingest(
@@ -42,7 +47,6 @@ def streaming_abtest_ingest(
     cells_dir: str,
     report_dir: str,
     z_crit: float = 1.959964,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch (experiment, arm) conversion
     cells into the A/B state, recompute the per-arm z report from the
@@ -57,54 +61,21 @@ def streaming_abtest_ingest(
         ab_cell_counts,
         ab_from_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite_read,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         # the batch operator's own cell stage — shared so the twin's
         # conversion coercion can never drift from batch semantics.
         batch_cells = ab_cell_counts(
             batch_df, experiment_col, arm_col, converted_col
         )
-        if experiment_col != "experiment":
-            batch_cells = batch_cells.withColumnRenamed(
-                experiment_col, "experiment"
-            )
-        if arm_col != "arm":
-            batch_cells = batch_cells.withColumnRenamed(arm_col, "arm")
-        prev = snapshot_before(spark, cells_dir, epoch_id).select(
-            "experiment", "arm", "n", "x"
-        )
-        # write-then-read-back (layout.snapshot_overwrite_read): one
-        # fewer job per epoch than the localCheckpoint idiom; both
-        # control-join sides read the committed _v= files.
-        merged = snapshot_overwrite_read(
-            prev.union(batch_cells)
-            .groupBy("experiment", "arm")
-            .agg(
-                F.sum("n").cast("bigint").alias("n"),
-                F.sum("x").cast("bigint").alias("x"),
-            ),
-            cells_dir,
-            version=epoch_id,
-        )
+        merged = merge_counts(prev, batch_cells, ["experiment", "arm"], ["n", "x"])
+        return [merged], lambda cells: [with_epoch(
+            ab_from_counts(cells, "experiment", "arm", control_label,
+                           z_crit=z_crit),
+            epoch_id,
+        )]
 
-        report = ab_from_counts(
-            merged, "experiment", "arm", control_label, z_crit=z_crit
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return state_twin(step, [(cells_dir, None)], [report_dir])
 
 
 def streaming_mann_whitney_ingest(
@@ -117,7 +88,6 @@ def streaming_mann_whitney_ingest(
     cells_dir: str,
     report_dir: str,
     z_crit: float = 1.959964,
-    idempotent: bool = True,
     buckets: int | None = None,
     bounds: tuple[float, float] | None = None,
 ):
@@ -148,52 +118,24 @@ def streaming_mann_whitney_ingest(
         mw_cell_counts,
         mw_from_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite_read,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         # the batch operator's own count stage — shared so the twin's
         # guards and quantization can never drift from batch semantics.
         batch_cells = mw_cell_counts(
             batch_df, experiment_col, arm_col, value_col,
             buckets=buckets, bounds=bounds,
         )
-        if experiment_col != "experiment":
-            batch_cells = batch_cells.withColumnRenamed(
-                experiment_col, "experiment"
-            )
-        if arm_col != "arm":
-            batch_cells = batch_cells.withColumnRenamed(arm_col, "arm")
-        prev = snapshot_before(spark, cells_dir, epoch_id).select(
-            "experiment", "arm", "_v", "_c"
+        merged = merge_counts(
+            prev, batch_cells, ["experiment", "arm", "_v"], ["_c"]
         )
-        # write-then-read-back (layout.snapshot_overwrite_read): one
-        # fewer job per epoch; arm list + arm cells + control replication
-        # all read the committed _v= files.
-        merged = snapshot_overwrite_read(
-            prev.union(batch_cells)
-            .groupBy("experiment", "arm", "_v")
-            .agg(F.sum("_c").cast("bigint").alias("_c")),
-            cells_dir,
-            version=epoch_id,
-        )
+        return [merged], lambda cells: [with_epoch(
+            mw_from_counts(cells, "experiment", "arm", control_label,
+                           z_crit=z_crit),
+            epoch_id,
+        )]
 
-        report = mw_from_counts(
-            merged, "experiment", "arm", control_label, z_crit=z_crit
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return state_twin(step, [(cells_dir, None)], [report_dir])
 
 
 def streaming_sprt_ingest(
@@ -208,7 +150,6 @@ def streaming_sprt_ingest(
     beta: float = 0.2,
     cells_dir: str,
     report_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch (experiment, arm) conversion
     cells into the SAME [n, x] state shape the A/B-z twin keeps, and
@@ -228,57 +169,22 @@ def streaming_sprt_ingest(
     """
     from meshinsights_data_pipeline_spark.operators.abtest import (
         ab_cell_counts,
+        sprt_constants,
         sprt_from_counts,
-    )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite_read,
     )
 
     # validate the constants at wiring time, not first micro-batch
-    from meshinsights_data_pipeline_spark.operators.abtest import (
-        sprt_constants,
-    )
-
     sprt_constants(p0, p1, alpha=alpha, beta=beta)
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         batch_cells = ab_cell_counts(
             batch_df, experiment_col, arm_col, converted_col
         )
-        if experiment_col != "experiment":
-            batch_cells = batch_cells.withColumnRenamed(
-                experiment_col, "experiment"
-            )
-        if arm_col != "arm":
-            batch_cells = batch_cells.withColumnRenamed(arm_col, "arm")
-        prev = snapshot_before(spark, cells_dir, epoch_id).select(
-            "experiment", "arm", "n", "x"
-        )
-        # write-then-read-back (layout.snapshot_overwrite_read): one
-        # fewer job per epoch than the localCheckpoint idiom.
-        merged = snapshot_overwrite_read(
-            prev.union(batch_cells)
-            .groupBy("experiment", "arm")
-            .agg(
-                F.sum("n").cast("bigint").alias("n"),
-                F.sum("x").cast("bigint").alias("x"),
-            ),
-            cells_dir,
-            version=epoch_id,
-        )
+        merged = merge_counts(prev, batch_cells, ["experiment", "arm"], ["n", "x"])
+        return [merged], lambda cells: [with_epoch(
+            sprt_from_counts(cells, "experiment", "arm", p0, p1,
+                             alpha=alpha, beta=beta),
+            epoch_id,
+        )]
 
-        report = sprt_from_counts(
-            merged, "experiment", "arm", p0, p1, alpha=alpha, beta=beta
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return state_twin(step, [(cells_dir, None)], [report_dir])

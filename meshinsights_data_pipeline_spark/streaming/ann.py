@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from meshinsights_data_pipeline_spark.operators.similarity import ivf_assign
+from meshinsights_data_pipeline_spark.streaming.state import state_twin
 
 
 def streaming_ivf_ingest(
@@ -31,43 +32,26 @@ def streaming_ivf_ingest(
     vectors_dir: str | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    idempotent: bool = True,
 ):
     """foreachBatch builder: per micro-batch, IVF-assign the new vectors
     (broadcast centroid argmax — map-side) and append [id, list_id] to
     ``lists_dir``; with ``vectors_dir`` set, also append the raw vectors
-    so searches need only the accumulated tables. ``idempotent`` defaults
-    True (exactly-once per epoch, matching the LSH/span ingest twins):
-    both appends route through epoch-keyed dynamic partition overwrite
-    (sources.layout.idempotent_epoch_append) so micro-batch retries
-    replace rather than duplicate — seed pre-existing tables with
-    ``idempotent_epoch_append(df, dir, epoch_id=-1)`` in that mode.
-    ``idempotent=False`` opts into plain at-least-once parquet appends
-    (duplicate rows on retry) for sinks that cannot host the epoch layout.
-
+    so searches need only the accumulated tables. Both appends are
+    exactly-once per epoch (epoch-keyed dynamic partition overwrite,
+    matching the LSH/span ingest twins), so micro-batch retries replace
+    rather than duplicate — seed pre-existing tables with
+    ``idempotent_epoch_append(df, dir, epoch_id=-1)``.
     Returns a callable for ``stream.writeStream.foreachBatch(...)``.
     """
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+    def step(batch_df, epoch_id, pin):
         assigned = ivf_assign(batch_df, centroids, id_col, vec_col)
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        if vectors_dir is None:
+            return [], [assigned]
+        return [], [assigned, batch_df.select(id_col, vec_col)]
 
-            idempotent_epoch_append(assigned, lists_dir, epoch_id)
-            if vectors_dir is not None:
-                idempotent_epoch_append(
-                    batch_df.select(id_col, vec_col), vectors_dir, epoch_id
-                )
-        else:
-            assigned.write.mode("append").parquet(lists_dir)
-            if vectors_dir is not None:
-                batch_df.select(id_col, vec_col).write.mode("append").parquet(
-                    vectors_dir
-                )
-
-    return _process
+    outputs = [lists_dir] if vectors_dir is None else [lists_dir, vectors_dir]
+    return state_twin(step, [], outputs)
 
 
 def streaming_pq_ingest(
@@ -80,7 +64,6 @@ def streaming_pq_ingest(
     m: int = 8,
     ks: int = 16,
     seed: int = 11,
-    idempotent: bool = True,
 ):
     """foreachBatch builder: PQ-encode each micro-batch of arriving
     vectors against the FIXED deterministic codebooks (the same
@@ -94,14 +77,12 @@ def streaming_pq_ingest(
     retrainings — drifting them online would silently re-interpret past
     codes.
 
-    ``idempotent`` defaults True (exactly-once per epoch, matching the
-    other ingest twins): appends route through epoch-keyed dynamic
-    partition overwrite; seed pre-existing tables with
-    ``idempotent_epoch_append(df, dir, epoch_id=-1)``. The per-batch
-    encode job runs under the same no-wholestage scope as the batch
-    operator (the PQ expression tree overflows whole-stage codegen's
-    method limit; per-operator codegen compiles it).
-
+    Appends are exactly-once per epoch (epoch-keyed dynamic partition
+    overwrite, like the other ingest twins); seed pre-existing tables
+    with ``idempotent_epoch_append(df, dir, epoch_id=-1)``. The
+    per-batch encode job runs under the same no-wholestage scope as the
+    batch operator (the PQ expression tree overflows whole-stage
+    codegen's method limit; per-operator codegen compiles it).
     Returns a callable for ``stream.writeStream.foreachBatch(...)``.
     """
     from meshinsights_data_pipeline_spark.operators.similarity import (
@@ -109,16 +90,13 @@ def streaming_pq_ingest(
         pq_encode,
     )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        codes = pq_encode(batch_df, id_col, vec_col, dim, m, ks, seed)
-        with _no_wholestage(batch_df.sparkSession):
-            if idempotent:
-                from meshinsights_data_pipeline_spark.sources.layout import (
-                    idempotent_epoch_append,
-                )
+    def step(batch_df, epoch_id, pin):
+        return [], [pq_encode(batch_df, id_col, vec_col, dim, m, ks, seed)]
 
-                idempotent_epoch_append(codes, codes_dir, epoch_id)
-            else:
-                codes.write.mode("append").parquet(codes_dir)
+    append = state_twin(step, [], [codes_dir])
+
+    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+        with _no_wholestage(batch_df.sparkSession):
+            append(batch_df, epoch_id)
 
     return _process

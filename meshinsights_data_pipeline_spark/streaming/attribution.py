@@ -24,13 +24,15 @@ because a late conversion may still attribute to an old touch.
 
 Deduped min-id-per-timestamp state is re-merge-idempotent, but state
 reads still use ``snapshot_before(epoch)`` for uniformity with the
-other twins; attribution appends are exactly-once per epoch by default.
+other twins; attribution appends are exactly-once per epoch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.state import state_twin
 
 
 def attribution_state_schema(
@@ -65,7 +67,6 @@ def streaming_attribution_ingest(
     conversion: str = "purchase",
     touch: str = "click",
     lookback_hours: int = 24,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch touches into state, attribute
     the batch's conversions against the merged history, append
@@ -78,29 +79,22 @@ def streaming_attribution_ingest(
     from meshinsights_data_pipeline_spark.operators.funnel import (
         last_touch_attribution,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         batch_touches = (
             batch_df.filter(F.col(type_col) == touch)
             .groupBy(F.col(user_col), F.col(ts_col).alias("t_ts"))
             .agg(F.min(id_col).alias("touch_id"))
         )
-        prev = snapshot_before(spark, touches_dir, epoch_id).select(
-            user_col, "t_ts", "touch_id"
-        )
         merged = (
-            prev.union(batch_touches)
+            prev.select(user_col, "t_ts", "touch_id")
+            .union(batch_touches)
             .groupBy(user_col, "t_ts")
             .agg(F.min("touch_id").alias("touch_id"))
-            .localCheckpoint()  # feeds the snapshot write AND attribution
         )
-        snapshot_overwrite(merged, touches_dir, version=epoch_id)
+        return [merged], lambda touches: [_attribute(batch_df, touches)]
 
+    def _attribute(batch_df: DataFrame, touches: DataFrame) -> DataFrame:
         # Reconstruct an event frame of (batch conversions + ALL touches
         # seen so far) and run the BATCH operator — streaming scores are
         # batch scores by construction, never a reimplementation drift.
@@ -112,13 +106,13 @@ def streaming_attribution_ingest(
             F.col(user_col).alias("user_id"),
             F.lit(conversion).alias("event_type"),
         )
-        touch_ev = merged.select(
+        touch_ev = touches.select(
             F.col("touch_id").alias("event_id"),
             F.col("t_ts").alias("ts"),
             F.col(user_col).alias("user_id"),
             F.lit(touch).alias("event_type"),
         )
-        out = last_touch_attribution(
+        return last_touch_attribution(
             conv_ev.unionByName(touch_ev),
             "user_id",
             "ts",
@@ -128,13 +122,5 @@ def streaming_attribution_ingest(
             touch=touch,
             lookback_hours=lookback_hours,
         )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
 
-            idempotent_epoch_append(out, attributions_dir, epoch_id)
-        else:
-            out.write.mode("append").parquet(attributions_dir)
-
-    return _process
+    return state_twin(step, [(touches_dir, None)], [attributions_dir])

@@ -21,14 +21,17 @@ State = three mergeable tables: ``[item_a, item_b, n_ab]`` keyed on the
 pair, ``[i, n_i]`` keyed on the item, and a 1-row ``[n_baskets]`` —
 bounded by the observed pair/item vocabulary, never the stream length.
 Summed counts are not re-merge-idempotent, so state reads use
-``snapshot_before(epoch)``; stat appends are exactly-once per epoch by
-default.
+``snapshot_before(epoch)``; stat appends are exactly-once per epoch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+)
 
 BASKET_PAIRS_SCHEMA = "item_a long, item_b long, n_ab long"
 BASKET_ITEMS_SCHEMA = "i long, n_i long"
@@ -45,7 +48,6 @@ def streaming_basket_ingest(
     stats_dir: str,
     min_support_count: int = 2,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch basket counts into state, emit
     association stats ``[item_a, item_b, n_ab, support, confidence_a_b,
@@ -55,19 +57,15 @@ def streaming_basket_ingest(
     using the matching ``BASKET_*_SCHEMA``. Returns the callable for
     ``stream.writeStream.foreachBatch(...)``.
     """
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
+    from meshinsights_data_pipeline_spark.operators.basket import (
+        association_stats,
     )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bi = (
+    def step(batch_df, epoch_id, pin, prev_pairs, prev_items, prev_total):
+        bi = pin(  # feeds pair, item AND basket counts
             batch_df.select(
                 F.col(basket_col).alias("b"), F.col(item_col).alias("i")
-            )
-            .distinct()
-            .localCheckpoint()  # feeds pair, item AND basket counts
+            ).distinct()
         )
         a = bi.select("b", F.col("i").alias("item_a"))
         c = bi.select("b", F.col("i").alias("item_b"))
@@ -77,61 +75,30 @@ def streaming_basket_ingest(
             .groupBy("item_a", "item_b")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_ab"))
         )
-        merged_pairs = (
-            snapshot_before(spark, pairs_dir, epoch_id)
-            .select("item_a", "item_b", "n_ab")
-            .union(batch_pairs)
-            .groupBy("item_a", "item_b")
-            .agg(F.sum("n_ab").cast("bigint").alias("n_ab"))
-            .localCheckpoint()
-        )
-        snapshot_overwrite(merged_pairs, pairs_dir, version=epoch_id)
-
         batch_items = bi.groupBy("i").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_i")
         )
-        merged_items = (
-            snapshot_before(spark, items_dir, epoch_id)
-            .select("i", "n_i")
-            .union(batch_items)
-            .groupBy("i")
-            .agg(F.sum("n_i").cast("bigint").alias("n_i"))
-            .localCheckpoint()
-        )
-        snapshot_overwrite(merged_items, items_dir, version=epoch_id)
-
         batch_total = bi.agg(
             F.countDistinct("b").cast("bigint").alias("n_baskets")
         )
-        merged_total = (
-            snapshot_before(spark, totals_dir, epoch_id)
-            .select("n_baskets")
-            .union(batch_total)
-            .agg(F.sum("n_baskets").cast("bigint").alias("n_baskets"))
-            .localCheckpoint()
-        )
-        snapshot_overwrite(merged_total, totals_dir, version=epoch_id)
-
-        from meshinsights_data_pipeline_spark.operators.basket import (
-            association_stats,
-        )
-
-        stats = association_stats(
-            merged_pairs.join(
+        merged = [
+            merge_counts(prev_pairs, batch_pairs, ["item_a", "item_b"], ["n_ab"]),
+            merge_counts(prev_items, batch_items, ["i"], ["n_i"]),
+            merge_counts(prev_total, batch_total, [], ["n_baskets"]),
+        ]
+        return merged, lambda pairs, items, total: [association_stats(
+            pairs.join(
                 batch_pairs.select("item_a", "item_b"), ["item_a", "item_b"],
                 "left_semi",  # emit only pairs observed THIS batch
             ).filter(F.col("n_ab") >= int(min_support_count)),
-            merged_items,
-            merged_total,
+            items,
+            total,
             round_to,
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        )]
 
-            idempotent_epoch_append(stats, stats_dir, epoch_id)
-        else:
-            stats.write.mode("append").parquet(stats_dir)
-
-    return _process
+    states = [
+        (pairs_dir, BASKET_PAIRS_SCHEMA),
+        (items_dir, BASKET_ITEMS_SCHEMA),
+        (totals_dir, BASKET_TOTALS_SCHEMA),
+    ]
+    return state_twin(step, states, [stats_dir])

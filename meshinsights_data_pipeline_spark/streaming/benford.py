@@ -14,13 +14,18 @@ State is TINY by construction — 9 rows per group — so this is the
 cheapest twin in the family: the merge shuffle carries at most
 9 x |groups| rows regardless of batch size. snapshot_before(epoch)
 reads keep retries idempotent; report appends are exactly-once per
-epoch by default.
+epoch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+    with_epoch,
+)
 
 
 def streaming_benford_ingest(
@@ -30,7 +35,6 @@ def streaming_benford_ingest(
     *,
     counts_dir: str,
     report_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch (group, digit) counts into the
     Benford state, recompute the conformance report from the merged
@@ -44,39 +48,15 @@ def streaming_benford_ingest(
         benford_digit_counts,
         benford_from_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         # the batch operator's own digit stage — shared so the twin's
         # domain guards (NULL group, |v| >= 1e12 ANSI overflow) can
         # never drift from batch semantics
         batch_counts = benford_digit_counts(batch_df, group_col, value_col)
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            "g", "_d", "_c"
-        )
-        merged = (
-            prev.union(batch_counts)
-            .groupBy("g", "_d")
-            .agg(F.sum("_c").cast("bigint").alias("_c"))
-            .localCheckpoint()  # consumed by the report AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
+        merged = merge_counts(prev, batch_counts, ["g", "_d"], ["_c"])
+        return [merged], lambda counts: [
+            with_epoch(benford_from_counts(counts), epoch_id)
+        ]
 
-        report = benford_from_counts(merged).withColumn(
-            "epoch", F.lit(int(epoch_id)).cast("bigint")
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return state_twin(step, [(counts_dir, None)], [report_dir])

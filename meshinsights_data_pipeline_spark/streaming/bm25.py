@@ -19,8 +19,8 @@ State = ONE mergeable counter table ``[key, val]`` holding ``n``,
 the smallest GLOBAL state table in the streaming family (dsir's is
 4096; the per-KEY minimum is the CUSUM twin's two scalars per key).
 Summed counters are not re-merge-idempotent, so state reads use
-``snapshot_before(epoch)``; score appends are exactly-once per epoch by
-default (epoch-keyed dynamic partition overwrite).
+``snapshot_before(epoch)``; score appends are exactly-once per epoch
+(epoch-keyed dynamic partition overwrite).
 
 Scale: per-batch work is one batch tokenize pass (document length
 map-side, only query-term tokens shuffle) plus a merge on the bounded
@@ -33,6 +33,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+)
 
 COUNTER_SCHEMA = "key string, val long"
 
@@ -47,7 +52,6 @@ def streaming_bm25_ingest(
     k1: float = 1.2,
     b: float = 0.75,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch corpus counters into state,
     score the batch docs against the merged statistics, append scores.
@@ -60,18 +64,13 @@ def streaming_bm25_ingest(
         _bm25_frames,
         _bm25_score,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
     terms = list(query_terms)
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         dls, tf = _bm25_frames(batch_df, id_col, text_col, terms)
         # tf feeds the df-counter increment AND the scoring join
-        tf = tf.localCheckpoint()
+        tf = pin(tf)
         batch_counters = (
             dls.agg(
                 F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -86,34 +85,20 @@ def streaming_bm25_ingest(
                 )
             )
         )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select("key", "val")
-        merged = (
-            prev.union(batch_counters)
-            .groupBy("key")
-            .agg(F.sum("val").cast("bigint").alias("val"))
-            .localCheckpoint()  # consumed by scoring AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
+        merged = merge_counts(prev, batch_counters, ["key"], ["val"])
+        return [merged], lambda counters: [_scores(tf, counters)]
 
+    def _scores(tf: DataFrame, counters: DataFrame) -> DataFrame:
         # the same [n, avgdl] / [term, df] shapes — and therefore the
         # same score expression tree — as the batch operator
-        stats = merged.groupBy().agg(
+        stats = counters.groupBy().agg(
             F.max(F.when(F.col("key") == "n", F.col("val"))).alias("n"),
             F.max(F.when(F.col("key") == "tl", F.col("val"))).alias("tl"),
         ).select("n", (F.col("tl").cast("double") / F.col("n")).alias("avgdl"))
-        dfreq = merged.filter(F.col("key").startswith("df:")).select(
+        dfreq = counters.filter(F.col("key").startswith("df:")).select(
             F.expr("substring(key, 4)").alias("term"),
             F.col("val").alias("df"),
         )
-        scores = _bm25_score(tf, dfreq, stats, id_col, k1, b, round_to)
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        return _bm25_score(tf, dfreq, stats, id_col, k1, b, round_to)
 
-            idempotent_epoch_append(scores, scores_dir, epoch_id)
-        else:
-            scores.write.mode("append").parquet(scores_dir)
-
-    return _process
+    return state_twin(step, [(counts_dir, COUNTER_SCHEMA)], [scores_dir])

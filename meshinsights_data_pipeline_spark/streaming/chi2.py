@@ -12,13 +12,18 @@ whose errors cluster).
 
 State = one versioned snapshot table ``[_a, _b, _o]`` at |A x B|
 cardinality. snapshot_before(epoch) reads keep retries idempotent;
-report appends are exactly-once per epoch by default.
+report appends are exactly-once per epoch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+    with_epoch,
+)
 
 
 def streaming_chi2_ingest(
@@ -28,7 +33,6 @@ def streaming_chi2_ingest(
     *,
     cells_dir: str,
     report_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch (a, b) contingency cells into
     the chi-square state, recompute the independence report from the
@@ -42,38 +46,15 @@ def streaming_chi2_ingest(
         chi2_cell_counts,
         chi2_from_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         # the batch operator's own cell stage — shared so the twin's
         # NULL-level exclusion can never drift from batch semantics.
-        batch_cells = chi2_cell_counts(batch_df, col_a, col_b)
-        prev = snapshot_before(spark, cells_dir, epoch_id).select(
-            "_a", "_b", "_o"
+        merged = merge_counts(
+            prev, chi2_cell_counts(batch_df, col_a, col_b), ["_a", "_b"], ["_o"]
         )
-        merged = (
-            prev.union(batch_cells)
-            .groupBy("_a", "_b")
-            .agg(F.sum("_o").cast("bigint").alias("_o"))
-            .localCheckpoint()  # feeds marginals + term fold + the
-            # snapshot write; must not read its own output dir
-        )
-        snapshot_overwrite(merged, cells_dir, version=epoch_id)
+        return [merged], lambda cells: [
+            with_epoch(chi2_from_counts(cells), epoch_id)
+        ]
 
-        report = chi2_from_counts(merged).withColumn(
-            "epoch", F.lit(int(epoch_id)).cast("bigint")
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return state_twin(step, [(cells_dir, None)], [report_dir])

@@ -34,25 +34,23 @@ from pyspark.sql import DataFrame
 
 def parallel_batch(
     *procs: Callable[[DataFrame, int], None],
-    max_workers: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Return a foreachBatch callable running ``procs`` concurrently.
 
-    ``max_workers`` defaults to ``len(procs)`` — the pool exists to
-    overlap job scheduling gaps, not to oversubscribe the driver.
+    One thread per processor — the pool exists to overlap job
+    scheduling gaps, not to oversubscribe the driver.
     InheritableThread semantics are not required here: the processors
     set no thread-local job groups, and each runs its own complete
     job chain.
     """
     if not procs:
         raise ValueError("parallel_batch needs at least one processor")
-    workers = max_workers or len(procs)
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         if len(procs) == 1:
             procs[0](batch_df, epoch_id)
             return
-        with ThreadPoolExecutor(max_workers=workers) as pool:
+        with ThreadPoolExecutor(max_workers=len(procs)) as pool:
             futures = [
                 pool.submit(p, batch_df, epoch_id) for p in procs
             ]

@@ -19,13 +19,16 @@ State carries the UNROUNDED decimals (rounding only at emission), so
 parity holds even at 6dp boundaries; rows with NULL/NaN values are
 guarded out BEFORE state updates (the r12 rolling-twin lesson: an
 unguarded bad row must not perturb carried state). Exactly-once per
-epoch by default via ``idempotent_epoch_append``.
+epoch via ``idempotent_epoch_append``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.sources.layout import columns_ddl
+from meshinsights_data_pipeline_spark.streaming.state import state_twin
 
 
 def cusum_state_schema(key_cols: str = "user_id long") -> str:
@@ -47,7 +50,6 @@ def streaming_cusum_ingest(
     target: float,
     slack: float = 0.5,
     threshold: float = 5.0,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: score the batch rows' two-sided CUSUM
     seeded by the carried per-key statistics, append
@@ -64,42 +66,29 @@ def streaming_cusum_ingest(
 
     from pyspark.sql import Window
 
-    from meshinsights_data_pipeline_spark.operators.barrier import release_checkpoint
     from meshinsights_data_pipeline_spark.operators.changepoint import (
         _cusum_clean,
         _cusum_exact,
         _cusum_round,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        columns_ddl,
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, state):
         # same guard + exact drift terms as the batch operator; bad
         # rows are dropped before they can touch carried state
         clean = _cusum_clean(
             batch_df, ts_col, keys, value_col, id_col, target, slack
-        )
-        state = snapshot_before(
-            spark, state_dir, epoch_id,
-            schema=cusum_state_schema(columns_ddl(batch_df, keys)),
         )
         prev = state.select(
             *keys,
             F.col("_sp").alias("_carry_p"),
             F.col("_sm").alias("_carry_m"),
         )
-        seeded = clean.join(prev, keys, "left")
-        scored = _cusum_exact(
-            seeded, ts_col, keys, id_col,
-            carry_p="_carry_p", carry_m="_carry_m",
-        ).localCheckpoint()  # feeds the emission AND the state rewrite
-
-        out = _cusum_round(scored, ts_col, keys, value_col, id_col,
-                           threshold)
+        scored = pin(  # feeds the emission AND the state rewrite
+            _cusum_exact(
+                clean.join(prev, keys, "left"), ts_col, keys, id_col,
+                carry_p="_carry_p", carry_m="_carry_m",
+            )
+        )
 
         # next state: each batch key's LAST exact statistic (the
         # recurrence's only memory), untouched keys keep their rows
@@ -112,17 +101,10 @@ def streaming_cusum_ingest(
             .select(*keys, F.col("_sp"), F.col("_sm"))
         )
         untouched = state.join(last.select(*keys), keys, "left_anti")
-        snapshot_overwrite(last.unionByName(untouched), state_dir,
-                           version=epoch_id)
+        out = _cusum_round(scored, ts_col, keys, value_col, id_col, threshold)
+        return [last.unionByName(untouched)], [out]
 
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+    def schema(batch_df: DataFrame) -> str:
+        return cusum_state_schema(columns_ddl(batch_df, keys))
 
-            idempotent_epoch_append(out, scores_dir, epoch_id)
-        else:
-            out.write.mode("append").parquet(scores_dir)
-        release_checkpoint(scored)  # written: free it now, not at the next GC
-
-    return _process
+    return state_twin(step, [(state_dir, schema)], [scores_dir])

@@ -22,6 +22,11 @@ from pyspark.sql import DataFrame
 
 from pyspark.sql import functions as F
 
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+)
+
 from meshinsights_data_pipeline_spark.operators.text import fingerprint
 
 
@@ -49,7 +54,6 @@ def streaming_lsh_ingest(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    idempotent: bool = True,
     shingle_fn=None,
 ):
     """Incremental near-dup candidate detection for a continuous ingest
@@ -64,12 +68,11 @@ def streaming_lsh_ingest(
     ``signature_dir`` is the accumulated banded-signature TABLE. Seed it
     with the existing corpus via ``idempotent_epoch_append(
     banded_signatures(corpus, ...), signature_dir, epoch_id=-1)`` (an
-    empty frame with the right schema for a cold start) — with the
-    default ``idempotent=True`` the table is epoch-partitioned, and a
-    plain flat ``banded_signatures(...).write`` seed would collide with
-    the first batch's ``_epoch=...`` directories (mixed flat+partitioned
-    layout fails partition discovery). Only with ``idempotent=False``
-    is a flat parquet seed correct. Each micro-batch, inside
+    empty frame with the right schema for a cold start) — the table is
+    epoch-partitioned, and a plain flat ``banded_signatures(...).write``
+    seed would collide with the first batch's ``_epoch=...`` directories
+    (mixed flat+partitioned layout fails partition discovery; the first
+    append rejects it). Each micro-batch, inside
     ``foreachBatch`` (batch semantics — the signature window functions
     are unsupported on streaming frames):
 
@@ -82,13 +85,13 @@ def streaming_lsh_ingest(
 
     With ``labels_dir`` set, the batch's new pairs are additionally folded
     into the accumulated ``[id, cluster_id]`` component labeling
-    (incremental cluster maintenance): the existing labels are read, the
+    (incremental cluster maintenance): the pre-epoch labels are read, the
     new edges merged via ``operators.components.incremental_components``
     (label stars ∪ new pairs -> bounded min-label pass), and a NEW
     snapshot is written — so a restart resumes from current labels instead
     of re-running batch CC over every pair ever emitted. The labels table
-    uses ``sources.layout.snapshot_overwrite`` / ``latest_snapshot``
-    versioned directories (``labels_dir/_v=<epoch>/``) rather than
+    uses ``sources.layout`` versioned snapshot directories
+    (``labels_dir/_v=<epoch>/``) rather than
     rewriting one path in place: an in-place ``mode("overwrite")`` deletes
     the old files before the new job commits, so a crash in that window
     silently loses the accumulated labeling; with snapshots a crashed
@@ -99,37 +102,32 @@ def streaming_lsh_ingest(
 
     Scale notes: the per-batch work is micro-batch x bucket-mates — never
     table^2; the (band, sig) join is broadcast-eligible while batches are
-    small and AQE-planned once they are not. Appends default to
-    ``idempotent=True`` (matching ``streaming_span_ingest``): both appends
-    go through ``sources.layout.idempotent_epoch_append`` — epoch-keyed
-    dynamic partition overwrite, so a retried micro-batch REPLACES its own
-    files and the sink is exactly-once per epoch (the labels rewrite is
-    already idempotent: re-merging the same pairs is a labeling no-op). In
-    that mode, seed ``signature_dir`` with ``idempotent_epoch_append(seed,
-    dir, epoch_id=-1)`` so the directory layout is uniformly
-    epoch-partitioned, and expect an ``_epoch`` partition column when
-    reading the tables. ``idempotent=False`` opts into plain at-least-once
-    parquet appends (duplicate pair/signature ROWS on micro-batch retry;
-    downstream consumers must distinct) for sinks that cannot host the
-    epoch layout.
+    small and AQE-planned once they are not. Both appends are epoch-keyed
+    dynamic partition overwrites (``streaming.state``), so a retried
+    micro-batch REPLACES its own files and the sink is exactly-once per
+    epoch; expect an ``_epoch`` partition column when reading the tables.
 
     Returns a callable for ``stream.writeStream.foreachBatch(...)``; the
     caller owns trigger/checkpoint wiring.
     """
+    from meshinsights_data_pipeline_spark.operators.components import (
+        incremental_components,
+    )
     from meshinsights_data_pipeline_spark.operators.dedup import banded_signatures
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        nb = banded_signatures(
-            batch_df,
-            id_col,
-            text_col,
-            n=n,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingles=shingle_fn(batch_df) if shingle_fn else None,
-        ).localCheckpoint()
-        existing = spark.read.parquet(signature_dir).select(
+    def step(batch_df, epoch_id, pin, *labels):
+        nb = pin(
+            banded_signatures(
+                batch_df,
+                id_col,
+                text_col,
+                n=n,
+                num_hashes=num_hashes,
+                bands=bands,
+                shingles=shingle_fn(batch_df) if shingle_fn else None,
+            )
+        )
+        existing = batch_df.sparkSession.read.parquet(signature_dir).select(
             "band", "sig", id_col
         )
         vs_table = (
@@ -151,42 +149,15 @@ def streaming_lsh_ingest(
         )
         # Materialized once: appended to the pair log AND (optionally)
         # folded into the labels table.
-        new_pairs = vs_table.union(intra).distinct().localCheckpoint()
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        new_pairs = pin(vs_table.union(intra).distinct())
+        merged = [
+            incremental_components(prev.select("id", "cluster_id"), new_pairs)
+            for prev in labels
+        ]
+        return merged, [new_pairs, nb]
 
-            idempotent_epoch_append(new_pairs, pairs_dir, epoch_id)
-        else:
-            new_pairs.write.mode("append").parquet(pairs_dir)
-        if labels_dir is not None:
-            from meshinsights_data_pipeline_spark.operators.components import (
-                incremental_components,
-            )
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                latest_snapshot,
-                snapshot_overwrite,
-            )
-
-            labels = latest_snapshot(spark, labels_dir).select("id", "cluster_id")
-            # localCheckpoint materializes the merged labeling BEFORE the
-            # snapshot write: on a micro-batch RETRY the latest committed
-            # snapshot can be this same epoch's own earlier attempt, so the
-            # read and write paths coincide and a lazy read-while-rewrite
-            # would corrupt the result.
-            merged = incremental_components(labels, new_pairs).localCheckpoint()
-            snapshot_overwrite(merged, labels_dir, version=epoch_id)
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(nb, signature_dir, epoch_id)
-        else:
-            nb.write.mode("append").parquet(signature_dir)
-
-    return _process
+    states = [] if labels_dir is None else [(labels_dir, None)]
+    return state_twin(step, states, [pairs_dir, signature_dir])
 
 
 def streaming_span_ingest(
@@ -198,7 +169,6 @@ def streaming_span_ingest(
     spans_dir: str,
     n: int = 5,
     min_docs: int = 2,
-    idempotent: bool = True,
 ):
     """Incremental cross-document duplicate-span detection — the streaming
     twin of ``operators.corpus.duplicate_spans`` (ExactSubstr-style span
@@ -234,11 +204,9 @@ def streaming_span_ingest(
     Scale notes: state is gram-cardinality (the n-gram vocabulary), the
     same order as the LSH signature table; per-batch work is one
     micro-batch gram pass + a gram-keyed join against the counts table.
-    Span appends default to ``idempotent=True`` (epoch-keyed dynamic
-    partition overwrite, exactly-once per epoch), mirroring the counts
-    snapshot's exactly-once version floor — a micro-batch retry must not
-    re-append identical span rows. ``idempotent=False`` opts into plain
-    at-least-once appends for sinks that cannot host the epoch layout.
+    Span appends are epoch-keyed (exactly-once per epoch), mirroring the
+    counts snapshot's version floor — a micro-batch retry must not
+    re-append identical span rows.
     Docs are assumed to arrive once (dedup the stream upstream with
     ``streaming_exact_dedup`` otherwise — a re-arriving doc would count
     itself as its own duplicate).
@@ -250,45 +218,27 @@ def streaming_span_ingest(
         merge_hit_spans,
         positional_shingle_hashes,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bg = positional_shingle_hashes(
-            batch_df, id_col, text_col, n
-        ).localCheckpoint()  # consumed by counts merge + span join + hits
+    def step(batch_df, epoch_id, pin, prev):
+        bg = pin(  # consumed by counts merge + span join + hits
+            positional_shingle_hashes(batch_df, id_col, text_col, n)
+        )
         batch_counts = (
             bg.select("h", id_col)
             .distinct()
             .groupBy("h")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
         )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select("h", "n_docs")
-        merged = (
-            prev.union(batch_counts)
-            .groupBy("h")
-            .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
-            .localCheckpoint()  # materialize BEFORE the snapshot write and
-            # the span join: both consume it, and on retry the write path
-            # must not read a plan that references its own output dir.
-        )
-        dup = merged.filter(F.col("n_docs") >= min_docs).select("h")
-        hits = bg.join(dup, "h").select(F.col(id_col), F.col("pos"))
-        spans = merge_hit_spans(hits, id_col, n)
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        merged = merge_counts(prev, batch_counts, ["h"], ["n_docs"])
 
-            idempotent_epoch_append(spans, spans_dir, epoch_id)
-        else:
-            spans.write.mode("append").parquet(spans_dir)
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
+        def spans(counts: DataFrame) -> list[DataFrame]:
+            dup = counts.filter(F.col("n_docs") >= min_docs).select("h")
+            hits = bg.join(dup, "h").select(F.col(id_col), F.col("pos"))
+            return [merge_hit_spans(hits, id_col, n)]
 
-    return _process
+        return [merged], spans
+
+    return state_twin(step, [(counts_dir, None)], [spans_dir])
 
 
 def streaming_payload_lsh_ingest(
@@ -303,7 +253,6 @@ def streaming_payload_lsh_ingest(
     stride: int = 4,
     num_hashes: int = 16,
     bands: int = 4,
-    idempotent: bool = True,
 ):
     """Incremental BINARY near-dup detection — ``streaming_lsh_ingest``
     over byte shingles (``multimodal.payload_shingle_hashes``): media
@@ -326,7 +275,6 @@ def streaming_payload_lsh_ingest(
         labels_dir=labels_dir,
         num_hashes=num_hashes,
         bands=bands,
-        idempotent=idempotent,
         shingle_fn=lambda d: payload_shingle_hashes(
             d, id_col, payload_col, n_bytes, stride
         ),

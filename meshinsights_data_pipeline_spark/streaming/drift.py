@@ -20,7 +20,7 @@ of the merge shuffle (the ``streaming_lm_ingest`` discipline). Summed
 counts are NOT re-merge-idempotent, so state reads use
 ``snapshot_before(epoch)``: a retried micro-batch recomputes from
 pre-epoch state and overwrites its own snapshot instead of
-double-counting. Report appends are exactly-once per epoch by default
+double-counting. Report appends are exactly-once per epoch
 (epoch-keyed dynamic partition overwrite).
 
 Scale: per-batch work is one batch token pass plus a merge keyed on
@@ -33,6 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meshinsights_data_pipeline_spark.streaming.state import (
+    state_twin,
+    with_epoch,
+)
+
 
 def streaming_drift_ingest(
     stream: DataFrame,
@@ -41,7 +46,6 @@ def streaming_drift_ingest(
     *,
     counts_dir: str,
     report_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch token counts into the drift
     state, recompute the per-source drift report from the merged counts,
@@ -57,13 +61,8 @@ def streaming_drift_ingest(
         drift_from_counts,
     )
     from meshinsights_data_pipeline_spark.operators.text import normalized_text
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         batch_counts = (
             batch_df.select(
                 F.col(source_col).alias("source"),
@@ -75,28 +74,15 @@ def streaming_drift_ingest(
             .groupBy("source", md5_int60(F.col("tok")).alias("h"))
             .agg(F.count(F.lit(1)).cast("double").alias("c_st"))
         )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            "source", "h", "c_st"
-        )
         merged = (
-            prev.union(batch_counts)
+            prev.select("source", "h", "c_st")
+            .union(batch_counts)
             .groupBy("source", "h")
             .agg(F.sum("c_st").alias("c_st"))
-            .localCheckpoint()  # consumed by the report AND the snapshot
-            # write; must not read a plan referencing its own output dir
         )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
+        return [merged], lambda counts: [
+            with_epoch(drift_from_counts(counts.withColumnRenamed("h", "tok")),
+                       epoch_id)
+        ]
 
-        report = drift_from_counts(
-            merged.withColumnRenamed("h", "tok")
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return state_twin(step, [(counts_dir, None)], [report_dir])

@@ -18,7 +18,7 @@ bounded by the ``buckets`` feature-space size (4096 rows by default —
 smaller than any corpus-growing state; bm25's |Q|+2 and the CUSUM
 twin's two scalars/key are the family minima). Summed counts are
 not re-merge-idempotent, so state reads use ``snapshot_before(epoch)``;
-score appends are exactly-once per epoch by default (epoch-keyed
+score appends are exactly-once per epoch (epoch-keyed
 dynamic partition overwrite).
 
 Scale: per-batch work is one batch tokenize pass plus a merge keyed on
@@ -32,6 +32,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+)
+
 
 def streaming_dsir_ingest(
     target_df: DataFrame,
@@ -42,7 +47,6 @@ def streaming_dsir_ingest(
     scores_dir: str,
     buckets: int = 4096,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch bucket counts into the raw
     count state, score the batch docs against the merged raw model and
@@ -57,10 +61,6 @@ def streaming_dsir_ingest(
         dsir_lambda,
         dsir_score,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
     # Static target counts: computed once, consumed by every epoch.
     c_t = (
@@ -70,37 +70,18 @@ def streaming_dsir_ingest(
         .localCheckpoint()
     )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        per_doc = (
+    def step(batch_df, epoch_id, pin, prev):
+        per_doc = pin(  # feeds the state merge AND the score join
             dsir_doc_buckets(batch_df, id_col, text_col, buckets)
             .groupBy(F.col(id_col), F.col("b"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("nb"))
-            .localCheckpoint()  # feeds the state merge AND the score join
         )
         batch_cr = per_doc.groupBy("b").agg(
             F.sum("nb").cast("bigint").alias("c_r")
         )
-        prev_cr = snapshot_before(spark, counts_dir, epoch_id).select("b", "c_r")
-        merged_cr = (
-            prev_cr.union(batch_cr)
-            .groupBy("b")
-            .agg(F.sum("c_r").cast("bigint").alias("c_r"))
-            .localCheckpoint()  # consumed by lambda AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged_cr, counts_dir, version=epoch_id)
+        merged_cr = merge_counts(prev, batch_cr, ["b"], ["c_r"])
+        return [merged_cr], lambda c_r: [
+            dsir_score(per_doc, dsir_lambda(c_r, c_t, buckets), id_col, round_to)
+        ]
 
-        scores = dsir_score(
-            per_doc, dsir_lambda(merged_cr, c_t, buckets), id_col, round_to
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(scores, scores_dir, epoch_id)
-        else:
-            scores.write.mode("append").parquet(scores_dir)
-
-    return _process
+    return state_twin(step, [(counts_dir, None)], [scores_dir])

@@ -21,13 +21,18 @@ collapses epoch over epoch has gone template-heavy.
 State = one versioned snapshot table ``[source, _tok(hash), _c]`` at
 |source| x |vocab| cardinality — the same cardinality (and discipline)
 as the drift twin's state. snapshot_before(epoch) reads keep retries
-idempotent; report appends are exactly-once per epoch by default.
+idempotent; report appends are exactly-once per epoch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+    with_epoch,
+)
 
 
 def streaming_entropy_ingest(
@@ -37,7 +42,6 @@ def streaming_entropy_ingest(
     *,
     counts_dir: str,
     report_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch (source, token-hash) counts
     into the entropy state, recompute the per-source entropy/Gini
@@ -51,48 +55,17 @@ def streaming_entropy_ingest(
         source_token_counts,
         token_entropy_from_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite_read,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         # the batch operator's own tokenize+count stage (hashed-key
         # tier) — shared so the twin's tokenization can never drift
         # from batch semantics if the normalization changes.
         batch_counts = source_token_counts(
             batch_df, source_col, text_col, hashed=True
         )
-        if source_col != "source":
-            batch_counts = batch_counts.withColumnRenamed(
-                source_col, "source"
-            )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            "source", "_tok", "_c"
-        )
-        # write-then-read-back: the snapshot write materializes the merge
-        # (one job) and the report reads the committed files — one fewer
-        # job per epoch than the old localCheckpoint idiom, and the report
-        # still never reads a plan referencing the dir being overwritten.
-        merged = snapshot_overwrite_read(
-            prev.union(batch_counts)
-            .groupBy("source", "_tok")
-            .agg(F.sum("_c").cast("bigint").alias("_c")),
-            counts_dir,
-            version=epoch_id,
-        )
+        merged = merge_counts(prev, batch_counts, ["source", "_tok"], ["_c"])
+        return [merged], lambda counts: [
+            with_epoch(token_entropy_from_counts(counts, "source"), epoch_id)
+        ]
 
-        report = token_entropy_from_counts(merged, "source").withColumn(
-            "epoch", F.lit(int(epoch_id)).cast("bigint")
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return state_twin(step, [(counts_dir, None)], [report_dir])

@@ -15,7 +15,7 @@ the same code path as the batch tier. Summed counts are NOT
 re-merge-idempotent, so state reads use ``snapshot_before(epoch)``: a
 retried micro-batch recomputes from pre-epoch state and overwrites its
 own snapshot instead of double-counting (the streaming_drift_ingest
-discipline). Report appends are exactly-once per epoch by default.
+discipline). Report appends are exactly-once per epoch.
 
 Scale: per-batch work is one batch count pass plus a merge keyed on
 (g, v); the KS recompute runs entirely at count-table cardinality — the
@@ -25,7 +25,12 @@ corpus is never rescanned.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+    with_epoch,
+)
 
 
 def streaming_ks_ingest(
@@ -35,7 +40,6 @@ def streaming_ks_ingest(
     *,
     counts_dir: str,
     report_dir: str,
-    idempotent: bool = True,
     buckets: int | None = None,
     bounds: tuple[float, float] | None = None,
 ):
@@ -62,13 +66,8 @@ def streaming_ks_ingest(
         ks_from_counts,
         ks_value_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         # the batch operator's own count stage — shared so the twin's
         # guards (NULL group/value) can never drift from batch semantics.
         # buckets bounds the state at |groups| x buckets; bounds MUST be
@@ -77,28 +76,9 @@ def streaming_ks_ingest(
         batch_counts = ks_value_counts(
             batch_df, group_col, value_col, buckets=buckets, bounds=bounds
         )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            "g", "_v", "_c_gv"
-        )
-        merged = (
-            prev.union(batch_counts)
-            .groupBy("g", "_v")
-            .agg(F.sum("_c_gv").cast("bigint").alias("_c_gv"))
-            .localCheckpoint()  # consumed by the report AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
+        merged = merge_counts(prev, batch_counts, ["g", "_v"], ["_c_gv"])
+        return [merged], lambda counts: [
+            with_epoch(ks_from_counts(counts), epoch_id)
+        ]
 
-        report = ks_from_counts(merged).withColumn(
-            "epoch", F.lit(int(epoch_id)).cast("bigint")
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return state_twin(step, [(counts_dir, None)], [report_dir])

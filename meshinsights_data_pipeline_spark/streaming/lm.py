@@ -18,7 +18,7 @@ snapshots): bigram counts [h_prev, h, cb] and unigram counts [h, cu];
 re-merge-idempotent, so state reads use ``snapshot_before(epoch)`` —
 a retried micro-batch recomputes from pre-epoch state and overwrites
 its own snapshot instead of double-counting. Score appends are
-exactly-once per epoch by default (epoch-keyed dynamic partition
+exactly-once per epoch (epoch-keyed dynamic partition
 overwrite).
 
 Scale: state is vocabulary/bigram-vocabulary cardinality (the same
@@ -32,6 +32,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+)
+
 
 def streaming_lm_ingest(
     stream: DataFrame,
@@ -41,7 +46,6 @@ def streaming_lm_ingest(
     bigram_dir: str,
     unigram_dir: str,
     scores_dir: str,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch n-gram counts into the LM state,
     score the batch docs against the merged model, append scores.
@@ -55,58 +59,31 @@ def streaming_lm_ingest(
         lm_score_bigrams,
         lm_token_hashes,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        h = lm_token_hashes(batch_df, id_col, text_col).localCheckpoint()
+    def step(batch_df, epoch_id, pin, prev_bc, prev_uc):
         # r16: bigrams map-side from the batch text (no per-doc lag
-        # window); h still feeds the unigram counts.
-        bigrams = lm_bigrams_from_text(batch_df, id_col, text_col).localCheckpoint()
-
-        batch_uc = h.groupBy("h").agg(F.count(F.lit(1)).cast("bigint").alias("cu"))
-        prev_uc = snapshot_before(spark, unigram_dir, epoch_id).select("h", "cu")
-        merged_uc = (
-            prev_uc.union(batch_uc)
+        # window); the token hashes feed only the unigram counts.
+        bigrams = pin(lm_bigrams_from_text(batch_df, id_col, text_col))
+        batch_uc = (
+            lm_token_hashes(batch_df, id_col, text_col)
             .groupBy("h")
-            .agg(F.sum("cu").cast("bigint").alias("cu"))
-            .localCheckpoint()  # consumed by scoring AND the snapshot
-            # write; must not read a plan referencing its own output dir
+            .agg(F.count(F.lit(1)).cast("bigint").alias("cu"))
         )
-        snapshot_overwrite(merged_uc, unigram_dir, version=epoch_id)
-
         batch_bc = bigrams.groupBy("h_prev", "h").agg(
             F.count(F.lit(1)).cast("bigint").alias("cb")
         )
-        prev_bc = snapshot_before(spark, bigram_dir, epoch_id).select(
-            "h_prev", "h", "cb"
-        )
-        merged_bc = (
-            prev_bc.union(batch_bc)
-            .groupBy("h_prev", "h")
-            .agg(F.sum("cb").cast("bigint").alias("cb"))
-            .localCheckpoint()
-        )
-        snapshot_overwrite(merged_bc, bigram_dir, version=epoch_id)
-
-        vsz = merged_uc.agg(F.count(F.lit(1)).alias("vsz"))
-        scores = lm_score_bigrams(
+        merged = [
+            merge_counts(prev_bc, batch_bc, ["h_prev", "h"], ["cb"]),
+            merge_counts(prev_uc, batch_uc, ["h"], ["cu"]),
+        ]
+        return merged, lambda bc, uc: [lm_score_bigrams(
             bigrams,
-            merged_bc,
-            merged_uc.withColumnRenamed("h", "h_prev"),
-            vsz,
+            bc,
+            uc.withColumnRenamed("h", "h_prev"),
+            uc.agg(F.count(F.lit(1)).alias("vsz")),
             id_col,
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        )]
 
-            idempotent_epoch_append(scores, scores_dir, epoch_id)
-        else:
-            scores.write.mode("append").parquet(scores_dir)
-
-    return _process
+    return state_twin(
+        step, [(bigram_dir, None), (unigram_dir, None)], [scores_dir]
+    )

@@ -16,8 +16,7 @@ State = ONE mergeable count table ``[h, n_docs]`` keyed on the 60-bit
 gram hash — the same shape streaming_span_ingest maintains, and like it
 bounded by the corpus's distinct-gram count, not its length. Summed
 counts are not re-merge-idempotent, so state reads use
-``snapshot_before(epoch)``; score appends are exactly-once per epoch by
-default.
+``snapshot_before(epoch)``; score appends are exactly-once per epoch.
 
 Scale: per-batch work is one batch shingle pass plus a gram-keyed merge
 and join. The corpus is never rescanned.
@@ -25,8 +24,12 @@ and join. The corpus is never rescanned.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+)
 
 NOVELTY_COUNTS_SCHEMA = "h long, n_docs long"
 
@@ -39,7 +42,6 @@ def streaming_novelty_ingest(
     scores_dir: str,
     n: int = 3,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch gram counts into state, score
     the batch docs' novelty against the merged counts, append scores
@@ -52,35 +54,17 @@ def streaming_novelty_ingest(
     from meshinsights_data_pipeline_spark.operators.dedup import (
         shingle_hashes,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sh = (
-            shingle_hashes(batch_df, id_col, text_col, n)
-            .select(id_col, "h")
-            .localCheckpoint()  # feeds the counts merge AND the score join
+    def step(batch_df, epoch_id, pin, prev):
+        sh = pin(  # feeds the counts merge AND the score join
+            shingle_hashes(batch_df, id_col, text_col, n).select(id_col, "h")
         )
         batch_counts = sh.groupBy("h").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs")
         )
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            "h", "n_docs"
-        )
-        merged = (
-            prev.union(batch_counts)
-            .groupBy("h")
-            .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
-            .localCheckpoint()  # consumed by scoring AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
-
-        scores = (
-            sh.join(merged, "h")
+        merged = merge_counts(prev, batch_counts, ["h"], ["n_docs"])
+        return [merged], lambda counts: [
+            sh.join(counts, "h")
             .groupBy(id_col)
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_grams"),
@@ -90,14 +74,6 @@ def streaming_novelty_ingest(
                     round_to,
                 ).alias("novel_frac"),
             )
-        )
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        ]
 
-            idempotent_epoch_append(scores, scores_dir, epoch_id)
-        else:
-            scores.write.mode("append").parquet(scores_dir)
-
-    return _process
+    return state_twin(step, [(counts_dir, NOVELTY_COUNTS_SCHEMA)], [scores_dir])

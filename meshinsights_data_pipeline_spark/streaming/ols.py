@@ -29,6 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meshinsights_data_pipeline_spark.streaming.state import (
+    state_twin,
+    with_epoch,
+)
+
 
 def streaming_ols_ingest(
     stream: DataFrame,
@@ -41,7 +46,6 @@ def streaming_ols_ingest(
     state_dir: str,
     report_dir: str,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: SUM-merge batch regression moments
     (folded against the FIXED ``x_floor``/``y_floor`` pivots) into the
@@ -56,11 +60,6 @@ def streaming_ols_ingest(
     sy decimal(38,12), sxy decimal(38,6), sxx decimal(38,6),
     syy decimal(38,6)``).
     """
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
-
     d12, d6 = "decimal(38,12)", "decimal(38,6)"
 
     def _batch_moments(batch_df: DataFrame) -> DataFrame:
@@ -89,14 +88,10 @@ def streaming_ols_ingest(
             )
         )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_m = _batch_moments(batch_df)
-        prev = snapshot_before(spark, state_dir, epoch_id).select(
-            group_col, "n", "sx", "sy", "sxy", "sxx", "syy"
-        )
+    def step(batch_df, epoch_id, pin, prev):
         merged = (
-            prev.union(batch_m)
+            prev.select(group_col, "n", "sx", "sy", "sxy", "sxx", "syy")
+            .union(_batch_moments(batch_df))
             .groupBy(group_col)
             .agg(
                 F.sum("n").cast("bigint").alias("n"),
@@ -106,9 +101,10 @@ def streaming_ols_ingest(
                 F.sum("sxx").cast(d6).alias("sxx"),
                 F.sum("syy").cast(d6).alias("syy"),
             )
-            .localCheckpoint()  # feeds the report AND the snapshot
         )
-        snapshot_overwrite(merged, state_dir, version=epoch_id)
+        return [merged], lambda moments: [with_epoch(_report(moments), epoch_id)]
+
+    def _report(merged: DataFrame) -> DataFrame:
         nD = F.col("n").cast("double")
         sx = F.col("sx").cast("double")
         sy = F.col("sy").cast("double")
@@ -129,20 +125,12 @@ def streaming_ols_ingest(
             (cov_n * cov_n) / (varx_n * vary_n),
         )
         rnd = lambda c: F.round(c, round_to) + F.lit(0.0)  # noqa: E731
-        report = merged.select(
+        return merged.select(
             F.col(group_col),
             "n",
             rnd(slope).alias("slope"),
             rnd(intercept).alias("intercept"),
             rnd(r2).alias("r2"),
-        ).withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+        )
 
-            idempotent_epoch_append(report, report_dir, epoch_id)
-        else:
-            report.write.mode("append").parquet(report_dir)
-
-    return _process
+    return state_twin(step, [(state_dir, None)], [report_dir])

@@ -11,7 +11,7 @@ everything ingested through epoch k, with no "as of ingest" caveat.
 State = ONE mergeable count table ``[a, b, n_ab]``, bounded by the
 corpus's distinct-bigram count. Summed counts are not
 re-merge-idempotent, so state reads use ``snapshot_before(epoch)``;
-top-k appends are exactly-once per epoch by default.
+top-k appends are exactly-once per epoch.
 
 Scale: per-batch work is one batch tokenize/bigram pass plus a
 bigram-keyed merge; scoring runs over the (small) merged count table.
@@ -20,8 +20,10 @@ The corpus is never rescanned.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+)
 
 PMI_COUNTS_SCHEMA = "a string, b string, n_ab long"
 
@@ -35,7 +37,6 @@ def streaming_pmi_ingest(
     min_count: int = 5,
     top_k: int = 100,
     round_to: int = 6,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: merge batch bigram counts into state,
     emit the merged corpus's top-k collocations ``[a, b, n_ab, pmi,
@@ -49,34 +50,12 @@ def streaming_pmi_ingest(
         bigram_counts,
         pmi_from_counts,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         batch_counts = bigram_counts(batch_df, id_col, text_col)
-        prev = snapshot_before(spark, counts_dir, epoch_id).select(
-            "a", "b", "n_ab"
-        )
-        merged = (
-            prev.union(batch_counts)
-            .groupBy("a", "b")
-            .agg(F.sum("n_ab").cast("bigint").alias("n_ab"))
-            .localCheckpoint()  # consumed by scoring AND the snapshot
-            # write; must not read a plan referencing its own output dir
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
+        merged = merge_counts(prev, batch_counts, ["a", "b"], ["n_ab"])
+        return [merged], lambda counts: [
+            pmi_from_counts(counts, min_count, top_k, round_to)
+        ]
 
-        top = pmi_from_counts(merged, min_count, top_k, round_to)
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
-
-            idempotent_epoch_append(top, topk_dir, epoch_id)
-        else:
-            top.write.mode("append").parquet(topk_dir)
-
-    return _process
+    return state_twin(step, [(counts_dir, PMI_COUNTS_SCHEMA)], [topk_dir])

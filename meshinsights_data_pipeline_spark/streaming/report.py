@@ -31,6 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+)
+
 
 def streaming_report_ingest(
     stream: DataFrame,
@@ -55,55 +60,36 @@ def streaming_report_ingest(
         token_count,
         with_quality_score,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        per_doc = with_quality_score(
-            batch_df, text_col, out_col="_wq"
-        ).select(
-            F.col(source_col).alias("source"),
-            fingerprint(F.col(text_col)).alias("fp"),
-            token_count(text_col).cast("bigint").alias("_tok"),
-            F.col("_wq").cast("decimal(18,6)").alias("_q"),
-        ).localCheckpoint()  # consumed by both merges; one batch pass
-
+    def step(batch_df, epoch_id, pin, prev_fp, prev_tot):
+        per_doc = pin(  # consumed by both merges; one batch pass
+            with_quality_score(batch_df, text_col, out_col="_wq").select(
+                F.col(source_col).alias("source"),
+                fingerprint(F.col(text_col)).alias("fp"),
+                token_count(text_col).cast("bigint").alias("_tok"),
+                F.col("_wq").cast("decimal(18,6)").alias("_q"),
+            )
+        )
         batch_fp = per_doc.groupBy("source", "fp").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs")
         )
-        prev_fp = snapshot_before(spark, fp_counts_dir, epoch_id).select(
-            "source", "fp", "n_docs"
-        )
-        merged_fp = (
-            prev_fp.union(batch_fp)
-            .groupBy("source", "fp")
-            .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
-            .localCheckpoint()  # materialize before writing over own input
-        )
-        snapshot_overwrite(merged_fp, fp_counts_dir, version=epoch_id)
-
         batch_tot = per_doc.groupBy("source").agg(
             F.sum("_tok").cast("bigint").alias("total_tokens"),
             F.sum("_q").cast("decimal(28,6)").alias("sum_quality"),
         )
-        prev_tot = snapshot_before(spark, totals_dir, epoch_id).select(
-            "source", "total_tokens", "sum_quality"
-        )
         merged_tot = (
-            prev_tot.union(batch_tot)
+            prev_tot.select("source", "total_tokens", "sum_quality")
+            .union(batch_tot)
             .groupBy("source")
             .agg(
                 F.sum("total_tokens").cast("bigint").alias("total_tokens"),
                 F.sum("sum_quality").cast("decimal(28,6)").alias("sum_quality"),
             )
-            .localCheckpoint()
         )
-        snapshot_overwrite(merged_tot, totals_dir, version=epoch_id)
+        merged_fp = merge_counts(prev_fp, batch_fp, ["source", "fp"], ["n_docs"])
+        return [merged_fp, merged_tot], []
 
-    return _process
+    return state_twin(step, [(fp_counts_dir, None), (totals_dir, None)], [])
 
 
 def report_from_state(

@@ -16,13 +16,16 @@ batch operator for a corpus-wide redo.
 
 Tail state is a pure function of the merged (key, ts, id) order —
 re-merge-idempotent — but reads use ``snapshot_before(epoch)`` for
-uniformity; score appends are exactly-once per epoch by default.
+uniformity; score appends are exactly-once per epoch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.sources.layout import columns_ddl
+from meshinsights_data_pipeline_spark.streaming.state import state_twin
 
 
 def rolling_state_schema(
@@ -47,7 +50,6 @@ def streaming_rolling_ingest(
     tail_dir: str,
     scores_dir: str,
     n: int = 5,
-    idempotent: bool = True,
 ):
     """foreachBatch callable: score the batch rows' rolling n-point
     sum/mean against (retained tail + batch), append
@@ -62,18 +64,11 @@ def streaming_rolling_ingest(
 
     from pyspark.sql import Window
 
-    from meshinsights_data_pipeline_spark.operators.barrier import release_checkpoint
     from meshinsights_data_pipeline_spark.operators.rollup import (
         rolling_stats,
     )
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        columns_ddl,
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev):
         # Same NULL/NaN guard as the batch operator, applied BEFORE the
         # union: an unguarded NULL/NaN row would survive into the
         # retained tail and evict a real observation, so later batches'
@@ -86,15 +81,10 @@ def streaming_rolling_ingest(
             F.col(id_col).alias("_id"),
             F.col(value_col).alias("_v"),
         )
-        schema = rolling_state_schema(
-            columns_ddl(batch_df, keys),
-            *(batch_df.schema[c].dataType.simpleString() for c in (ts_col, id_col, value_col)),
+        merged = pin(  # feeds scoring, the tail rewrite, AND the
+            # batch-row semi-join
+            prev.select(*keys, "_ts", "_id", "_v").union(batch)
         )
-        prev = snapshot_before(spark, tail_dir, epoch_id, schema=schema).select(
-            *keys, "_ts", "_id", "_v"
-        )
-        merged = prev.union(batch).localCheckpoint()  # feeds scoring,
-        # the tail rewrite, AND the batch-row semi-join
 
         scored = rolling_stats(merged, "_ts", keys, "_v", "_id", n=n)
         out = scored.join(
@@ -117,16 +107,13 @@ def streaming_rolling_ingest(
             .filter(F.col("_rn") <= int(n) - 1)
             .drop("_rn")
         )
-        snapshot_overwrite(tail, tail_dir, version=epoch_id)
+        return [tail], [out]
 
-        if idempotent:
-            from meshinsights_data_pipeline_spark.sources.layout import (
-                idempotent_epoch_append,
-            )
+    def schema(batch_df: DataFrame) -> str:
+        return rolling_state_schema(
+            columns_ddl(batch_df, keys),
+            *(batch_df.schema[c].dataType.simpleString()
+              for c in (ts_col, id_col, value_col)),
+        )
 
-            idempotent_epoch_append(out, scores_dir, epoch_id)
-        else:
-            out.write.mode("append").parquet(scores_dir)
-        release_checkpoint(merged)  # written: free it now, not at the next GC
-
-    return _process
+    return state_twin(step, [(tail_dir, schema)], [scores_dir])

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from meshinsights_data_pipeline_spark.streaming.state import state_twin
 from pyspark.sql.utils import AnalysisException
 
 
@@ -63,35 +65,30 @@ def streaming_scd2_ingest(
     Read the full history back with ``scd2_read``.
     """
     from meshinsights_data_pipeline_spark.operators.snapshot import scd2_merge
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        idempotent_epoch_append,
-        snapshot_before,
-        snapshot_overwrite,
-    )
 
     out_cols = [*keys, *attrs, valid_from, valid_to]
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        open_prev = snapshot_before(spark, open_dir, epoch_id).select(*out_cols)
+    def step(batch_df, epoch_id, pin, open_prev):
         # open_prev holds only valid_to-NULL rows, so everything scd2_merge
         # returns with a non-NULL valid_to was closed by THIS batch.
-        merged = scd2_merge(
-            open_prev,
-            batch_df.select(*keys, *attrs, ts_col),
-            keys=keys,
-            attrs=attrs,
-            ts_col=ts_col,
-            valid_from=valid_from,
-            valid_to=valid_to,
-        ).localCheckpoint()  # consumed twice (closed + open split); avoid
-        # re-running the merge join per consumer
-        newly_closed = merged.where(F.col(valid_to).isNotNull())
-        new_open = merged.where(F.col(valid_to).isNull())
-        idempotent_epoch_append(newly_closed, closed_dir, epoch_id)
-        snapshot_overwrite(new_open, open_dir, version=epoch_id)
+        merged = pin(  # consumed twice (closed + open split); avoid
+            # re-running the merge join per consumer
+            scd2_merge(
+                open_prev.select(*out_cols),
+                batch_df.select(*keys, *attrs, ts_col),
+                keys=keys,
+                attrs=attrs,
+                ts_col=ts_col,
+                valid_from=valid_from,
+                valid_to=valid_to,
+            )
+        )
+        return (
+            [merged.where(F.col(valid_to).isNull())],
+            [merged.where(F.col(valid_to).isNotNull())],
+        )
 
-    return _process
+    return state_twin(step, [(open_dir, None)], [closed_dir])
 
 
 def scd2_read(

@@ -31,6 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meshinsights_data_pipeline_spark.streaming.state import (
+    merge_counts,
+    state_twin,
+)
+
 
 def streaming_transitions_ingest(
     stream: DataFrame,
@@ -57,14 +62,7 @@ def streaming_transitions_ingest(
     """
     from pyspark.sql import Window
 
-    from meshinsights_data_pipeline_spark.sources.layout import (
-        idempotent_epoch_append,
-        snapshot_before,
-        snapshot_overwrite,
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, epoch_id, pin, prev_last, prev_counts):
         ev = batch_df.select(
             F.col(entity_col).alias("entity"),
             F.col(ts_col).alias("ts"),
@@ -78,13 +76,12 @@ def streaming_transitions_ingest(
         internal = seq.where(F.col("prev").isNotNull()).select(
             F.col("prev").alias("from_state"), F.col("state").alias("to_state")
         )
-        prev_last = snapshot_before(spark, last_dir, epoch_id).select(
-            "entity", "ts", "tb", F.col("state").alias("from_state")
-        )
+        last = prev_last.select("entity", "ts", "tb", "state")
         boundary = (
             seq.where(F.col("rn") == 1)
             .select("entity", F.col("state").alias("to_state"))
-            .join(prev_last.select("entity", "from_state"), "entity")
+            .join(last.select("entity", F.col("state").alias("from_state")),
+                  "entity")
             .select("from_state", "to_state")
         )
         batch_counts = (
@@ -92,17 +89,6 @@ def streaming_transitions_ingest(
             .groupBy("from_state", "to_state")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         )
-        prev_counts = snapshot_before(spark, counts_dir, epoch_id).select(
-            "from_state", "to_state", "n"
-        )
-        merged = (
-            prev_counts.union(batch_counts)
-            .groupBy("from_state", "to_state")
-            .agg(F.sum("n").cast("bigint").alias("n"))
-            .localCheckpoint()  # consumed by the report AND the snapshot
-        )
-        snapshot_overwrite(merged, counts_dir, version=epoch_id)
-
         # new last-state table: the batch's latest event per entity wins;
         # entities silent this batch carry forward.
         batch_last = (
@@ -110,23 +96,20 @@ def streaming_transitions_ingest(
             .agg(F.max_by(F.struct("ts", "tb", "state"), F.struct("ts", "tb")).alias("_m"))
             .select("entity", "_m.ts", "_m.tb", "_m.state")
         )
-        carried = prev_last.select(
-            "entity", "ts", "tb", F.col("from_state").alias("state")
-        ).join(batch_last.select("entity"), "entity", "left_anti")
-        snapshot_overwrite(
-            batch_last.unionByName(carried).localCheckpoint(),
-            last_dir,
-            version=epoch_id,
-        )
-
+        carried = last.join(batch_last.select("entity"), "entity", "left_anti")
+        merged = [
+            batch_last.unionByName(carried),
+            merge_counts(prev_counts, batch_counts, ["from_state", "to_state"], ["n"]),
+        ]
         wtot = Window.partitionBy("from_state")
-        report = merged.select(
+        return merged, lambda _, counts: [counts.select(
             F.lit(int(epoch_id)).cast("bigint").alias("epoch"),
             "from_state",
             "to_state",
             "n",
             F.round(F.col("n") / F.sum("n").over(wtot), round_p).alias("p"),
-        )
-        idempotent_epoch_append(report, report_dir, epoch_id)
+        )]
 
-    return _process
+    return state_twin(
+        step, [(last_dir, None), (counts_dir, None)], [report_dir]
+    )

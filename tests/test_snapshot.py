@@ -22,6 +22,7 @@ from meshinsights_data_pipeline_spark.operators.snapshot import (
     scd2_merge,
     cdc_delta,
 )
+from tests.streaming_checks import released_each_epoch
 
 _HIST_SCHEMA = StructType(
     [
@@ -214,6 +215,7 @@ def test_streaming_scd2_sequential_parity_and_retry(spark, tmp_path):
     process = streaming_scd2_ingest(
         b1, keys=["k"], attrs=["seg", "bal"], ts_col="ts",
         open_dir=odir, closed_dir=cdir)
+    process = released_each_epoch(spark, process)
     process(b1, 0)
     process(b2, 1)
 

@@ -20,6 +20,7 @@ from meshinsights_data_pipeline_spark.streaming import (
     streaming_session_window,
     streaming_sunday_weekly_stats,
 )
+from tests.streaming_checks import released_each_epoch
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -392,7 +393,6 @@ def test_lsh_ingest_idempotent_epoch_retry(spark, tmp_path):
     process = streaming_lsh_ingest(
         batch, "doc_id", "text",
         signature_dir=sig_dir, pairs_dir=pairs_dir, labels_dir=labels_dir,
-        idempotent=True,
     )
     process(batch, 0)
     first_pairs = sorted(
@@ -459,6 +459,7 @@ def test_streaming_pq_ingest_parity_and_retry(spark, tmp_path):
 
     # retry: re-running an epoch must not change the table
     process = streaming_pq_ingest(arriving, codes_dir=codes_dir)
+    process = released_each_epoch(spark, process)
     process(arriving.limit(5), 99)
     once = spark.read.parquet(codes_dir).count()
     process(arriving.limit(5), 99)
@@ -680,7 +681,6 @@ def test_span_ingest_retry_does_not_double_count(spark, tmp_path):
     )
     process = streaming_span_ingest(
         doc, "doc_id", "text", counts_dir=counts_dir, spans_dir=spans_dir,
-        idempotent=True,
     )
     process(doc, 0)
     counts1 = sorted(
@@ -737,6 +737,7 @@ def test_streaming_report_parity_and_retry(spark, tmp_path):
     process = streaming_report_ingest(
         b1, fp_counts_dir=fp_dir, totals_dir=tot_dir
     )
+    process = released_each_epoch(spark, process)
     process(b1, 0)
     process(b2, 1)
 
@@ -787,6 +788,7 @@ def test_streaming_lm_parity_and_retry(spark, tmp_path):
 
     process = streaming_lm_ingest(
         b1, bigram_dir=bi_dir, unigram_dir=un_dir, scores_dir=sc_dir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -1476,6 +1478,7 @@ def test_streaming_dsir_parity_and_retry(spark, tmp_path):
 
     process = streaming_dsir_ingest(
         target, counts_dir=cnt_dir, scores_dir=sc_dir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -1530,6 +1533,7 @@ def test_streaming_bm25_parity_and_retry(spark, tmp_path):
 
     process = streaming_bm25_ingest(
         terms, counts_dir=cnt_dir, scores_dir=sc_dir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted((r.doc_id, r.n_terms, r.score) for r in df.collect())
@@ -1677,6 +1681,7 @@ def test_streaming_novelty_parity_and_retry(spark, tmp_path):
 
     process = streaming_novelty_ingest(
         counts_dir=cnt_dir, scores_dir=sc_dir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted((r.doc_id, r.n_grams, r.novel_frac)
@@ -1743,6 +1748,7 @@ def test_streaming_basket_parity_and_retry(spark, tmp_path):
     process = streaming_basket_ingest(
         pairs_dir=dirs["pairs"], items_dir=dirs["items"],
         totals_dir=dirs["totals"], stats_dir=dirs["st"])
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -1979,6 +1985,7 @@ def test_streaming_pmi_full_cross_batch_parity_and_retry(spark, tmp_path):
         spark.createDataFrame([], PMI_COUNTS_SCHEMA), c_dir, -1)
     process = streaming_pmi_ingest(
         counts_dir=c_dir, topk_dir=t_dir, min_count=2, top_k=20)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted((r.a, r.b, r.n_ab, r.pmi, r.rk) for r in df.collect())
@@ -2253,6 +2260,39 @@ def test_streaming_twin_checkpoints_released_each_epoch(spark, tmp_path):
         rolling_stats(rows, "ts", ["user_id"], "value", "event_id", n=3), r_cols)
 
 
+def test_only_the_state_helper_touches_twin_state():
+    """Source-only guard (no Spark): every streaming twin runs its epoch
+    through ``streaming.state.state_twin``, so no other ``streaming/``
+    module imports or calls the versioned-state reads and writes itself.
+    Read-only helpers may keep ``latest_snapshot``."""
+    import ast
+    import pathlib
+
+    import meshinsights_data_pipeline_spark.streaming as streaming
+
+    owned = {
+        "snapshot_before",
+        "snapshot_overwrite",
+        "snapshot_overwrite_read",
+        "idempotent_epoch_append",
+    }
+    found = []
+    for path in sorted(pathlib.Path(streaming.__file__).parent.glob("*.py")):
+        if path.name == "state.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                names = {a.name for a in node.names}
+            elif isinstance(node, ast.Attribute):
+                names = {node.attr}
+            elif isinstance(node, ast.Name):
+                names = {node.id}
+            else:
+                continue
+            found += [f"{path.name}:{node.lineno} {n}" for n in names & owned]
+    assert found == []
+
+
 def test_streaming_ks_full_parity_and_retry(spark, tmp_path):
     """KS twin: single-batch report equals the batch operator exactly;
     after a second batch the epoch-1 report equals the batch operator
@@ -2279,6 +2319,7 @@ def test_streaming_ks_full_parity_and_retry(spark, tmp_path):
 
     process = streaming_ks_ingest(
         b1, "source", "value", counts_dir=cdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df, gcol="g"):
         return sorted((r[gcol], r["n"], r["ks"]) for r in df.collect())
@@ -2329,6 +2370,7 @@ def test_streaming_benford_full_parity_and_retry(spark, tmp_path):
 
     process = streaming_benford_ingest(
         b1, "source", "value", counts_dir=cdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df, gcol="g"):
         return sorted(
@@ -2376,6 +2418,7 @@ def test_streaming_km_full_parity_and_retry(spark, tmp_path):
 
     process = streaming_km_ingest(
         b1, ["cohort"], "dur", "churned", counts_dir=cdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -2430,6 +2473,7 @@ def test_streaming_entropy_full_parity_and_retry(spark, tmp_path):
 
     process = streaming_entropy_ingest(
         b1, counts_dir=cdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -2488,6 +2532,7 @@ def test_streaming_abtest_full_parity_and_retry(spark, tmp_path):
 
     process = streaming_abtest_ingest(
         b1, cells_dir=cdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -2553,6 +2598,7 @@ def test_streaming_mann_whitney_full_parity_and_retry(spark, tmp_path):
 
     process = streaming_mann_whitney_ingest(
         b1, cells_dir=cdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -2606,6 +2652,7 @@ def test_streaming_chi2_full_parity_and_retry(spark, tmp_path):
 
     process = streaming_chi2_ingest(
         b1, "x", "y", cells_dir=cdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -2660,6 +2707,7 @@ def test_streaming_jsd_full_parity_and_retry(spark, tmp_path):
 
     process = streaming_jsd_ingest(
         b1, counts_dir=cdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -2717,6 +2765,7 @@ def test_streaming_auc_full_parity_and_retry(spark, tmp_path):
     process = streaming_auc_ingest(
         b1, group_col="g", label_col="y", score_col="s",
         cells_dir=cdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -2777,6 +2826,7 @@ def test_streaming_calibration_full_parity_and_retry(spark, tmp_path):
     process = streaming_calibration_ingest(
         b1, group_col="g", score_col="s", label_col="y",
         bins=10, state_dir=sdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -2836,6 +2886,7 @@ def test_streaming_bootstrap_full_parity_and_retry(spark, tmp_path):
     process = streaming_bootstrap_ingest(
         b1, group_col="g", value_col="v", id_col="id",
         b=B, state_dir=sdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -2895,6 +2946,7 @@ def test_streaming_sprt_full_parity_and_retry(spark, tmp_path):
 
     process = streaming_sprt_ingest(
         b1, p0=0.3, p1=0.35, cells_dir=cdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -2957,6 +3009,7 @@ def test_streaming_hll_full_parity_and_retry(spark, tmp_path):
     process = streaming_hll_ingest(
         b1, group_col="g", value_col="v", p=P,
         state_dir=sdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -3014,6 +3067,7 @@ def test_streaming_cms_full_parity_and_retry(spark, tmp_path):
     process = streaming_cms_ingest(
         b1, group_col="g", value_col="v", depth=D, width=W,
         items=items, state_dir=sdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
@@ -3074,6 +3128,7 @@ def test_streaming_hist_quantile_full_parity_and_retry(spark, tmp_path):
     process = streaming_hist_quantile_ingest(
         b1, group_col="g", value_col="v",
         lo=LO, hi=HI, bins=B, qs=QS, state_dir=sdir, report_dir=rdir)
+    process = released_each_epoch(spark, process)
 
     def canon(df):
         return sorted(
