@@ -2,8 +2,10 @@
 
 ``entry(spark)`` runs the flagship E2E workload slice (sessionize ->
 valid-cycle filter -> per-cycle medians) on sf0.001. ``queries()`` /
-``oracle_sql()`` expose the declared query set (SURVEY.md §2.14) plus the
-extension operators; the driver compares each pair via DuckDB at sf0.01.
+``oracle_sql()`` expose every query registered in ``plans.queries.QUERIES``
+(212: Q01-Q73 of SURVEY.md §2.14, the x01-x103 extension set and the
+x104-x139 statistics set), each with its DuckDB oracle SQL; the driver
+compares each pair via DuckDB at sf0.01.
 """
 
 from __future__ import annotations
@@ -27,4 +29,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each queries() entry."""
-    return {name: q.oracle for name, q in QUERIES.items() if q.oracle is not None}
+    return {name: q.oracle for name, q in QUERIES.items()}

@@ -304,8 +304,7 @@ def main() -> None:
 
     # Temporal drift monitoring end-to-end (examples/drift_monitoring.py's
     # core: per-user CUSUM changepoints -> alarm triage summary) — the
-    # r14 anchor's composed plan, gated now so its regression history
-    # starts before registration.
+    # composed plan of the x104 anchor.
     try:
         from pyspark.sql import functions as F
 
@@ -337,8 +336,7 @@ def main() -> None:
 
     # Data-quality gate end-to-end (examples/data_quality.py's core: KS
     # drift + Benford conformance + token entropy/Gini over three
-    # tables) — the r14 x107/x109/x110 anchors' composed plans, gated
-    # now so their regression history starts before registration.
+    # tables) — the composed plans of the x107/x109/x110 anchors.
     try:
         from meshinsights_data_pipeline_spark.operators.corpus import (
             source_token_entropy,
@@ -378,10 +376,9 @@ def main() -> None:
         print(f"bench: data quality e2e failed: {exc}", file=sys.stderr)
         extras_failed["data_quality_e2e"] = str(exc)
 
-    # Statistical-tests end-to-end (the r15 staged anchors' composed
-    # plans: Welch t + chi-square independence + lag-k ACF + JS mix
-    # divergence) — gated now so their regression history starts before
-    # registration (the r13 drift/data-quality precedent).
+    # Statistical-tests end-to-end (the composed plans of the x116-x119
+    # anchors: Welch t + chi-square independence + lag-k ACF + JS mix
+    # divergence).
     try:
         from pyspark.sql import functions as F
 
@@ -447,11 +444,9 @@ def main() -> None:
         print(f"bench: stat tests e2e failed: {exc}", file=sys.stderr)
         extras_failed["stat_tests_e2e"] = str(exc)
 
-    # Judge/classifier-evaluation end-to-end (the r16 staged anchors'
-    # composed plans: ROC-AUC + calibration report + Cohen's kappa +
-    # Cliff's delta + bootstrap CI + SPRT decisions + CUPED) — gated
-    # now so their regression history starts before registration (the
-    # stat_tests_e2e precedent).
+    # Judge/classifier-evaluation end-to-end (the composed plans of the
+    # x124-x130 anchors: ROC-AUC + calibration report + Cohen's kappa +
+    # Cliff's delta + bootstrap CI + SPRT decisions + CUPED).
     try:
         from pyspark.sql import functions as F
 
@@ -543,7 +538,7 @@ def main() -> None:
     # HLL per-source cardinality, CMS hot-token estimates over the
     # exploded token stream, KMV pairwise source overlap — composed
     # over sf0.1 documents and gated like the other e2e extras (the
-    # staged x131-x133 anchors cover correctness at sf0.01; this gates
+    # x131-x133 anchors cover correctness at sf0.01; this gates
     # the composed cost at the bench tier).
     try:
         from pyspark.sql import functions as F
@@ -577,7 +572,7 @@ def main() -> None:
         )
         # r16 optimization round — same §2.6 overlap + methodology note
         # as stat_tests_e2e: three independent sketches; correctness
-        # stays covered by the staged x131-x133 anchors.
+        # stays covered by the x131-x133 anchors.
         from concurrent.futures import ThreadPoolExecutor
 
         def _noop_sk(frame) -> None:

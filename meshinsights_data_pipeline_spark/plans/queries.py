@@ -1,4 +1,6 @@
-"""Declared query set (SURVEY.md §2.14, Q01-Q25) + extension queries.
+"""Declared query set (SURVEY.md §2.14): Q01-Q73 here, plus the extension
+(``extension_queries``) and statistics (``stats_queries``) sets, all
+registered once into ``QUERIES``.
 
 Each entry pairs a Spark DataFrame builder with the equivalent ANSI SQL for
 the DuckDB oracle. Column names are aliased identically on both sides (the
@@ -35,14 +37,15 @@ from meshinsights_data_pipeline_spark.operators.rcv import robust_cv
 from meshinsights_data_pipeline_spark.operators.sessionize import sessionize
 from meshinsights_data_pipeline_spark.operators.valid_cycles import filter_valid_cycles
 from meshinsights_data_pipeline_spark.operators.weekly import sunday_week_start, week_label
+from meshinsights_data_pipeline_spark.plans.extension_queries import EXTENSION_BUILDERS
+from meshinsights_data_pipeline_spark.plans.stats_queries import STATS_QUERIES
 
 
 @dataclass(frozen=True)
 class Query:
     name: str
     spark: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
-    doc: str = ""
+    oracle: str  # ANSI SQL for DuckDB
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2662,55 +2665,29 @@ _BUILDERS = {
     "q71": q71, "q72": q72, "q73": q73,
 }
 
-QUERIES: dict[str, Query] = {
-    name: Query(name=name, spark=fn, oracle=_ORACLES.get(name), doc=fn.__doc__ or "")
-    for name, fn in _BUILDERS.items()
-}
+def _register(*mappings: dict[str, tuple[Callable, str]]) -> dict[str, Query]:
+    """One Query per ``name -> (builder, oracle_sql)`` entry, in mapping
+    order. A name that two mappings share raises: a plain dict merge
+    would silently let the later entry replace a checked query."""
+    out: dict[str, Query] = {}
+    for mapping in mappings:
+        for name, (fn, oracle) in mapping.items():
+            if name in out:
+                raise ValueError(f"query {name!r} is registered twice")
+            out[name] = Query(name=name, spark=fn, oracle=oracle)
+    return out
 
 
-def _register_extensions() -> None:
-    from meshinsights_data_pipeline_spark.plans.drafts_r14 import (
-        DRAFTS as DRAFTS_R14,
-    )
-    from meshinsights_data_pipeline_spark.plans.drafts_r15 import (
-        DRAFTS as DRAFTS_R15,
-    )
-    from meshinsights_data_pipeline_spark.plans.drafts_r16 import (
-        DRAFTS as DRAFTS_R16,
-    )
-    from meshinsights_data_pipeline_spark.plans.extension_queries import EXTENSION_BUILDERS
-
-    # DRAFTS_R14 (x104-x115, staged+oracle-proven in r13, registered
-    # r14), DRAFTS_R15 (x116-x123, staged+oracle-proven in r14,
-    # registered r15) and DRAFTS_R16 (x124-x130, staged+oracle-proven
-    # in r15, registered r16) after EXTENSION_BUILDERS; the x04 capped
-    # replacement lives in extension_queries under its original name.
-    for name, (fn, oracle) in {
-        **EXTENSION_BUILDERS, **DRAFTS_R14, **DRAFTS_R15, **DRAFTS_R16
-    }.items():
-        QUERIES[name] = Query(name=name, spark=fn, oracle=oracle, doc=fn.__doc__ or "")
+QUERIES = _register(
+    {name: (fn, _ORACLES[name]) for name, fn in _BUILDERS.items()},
+    EXTENSION_BUILDERS,
+    STATS_QUERIES,
+)
 
 
-_register_extensions()
-
-
-# Driver-verification window: the first 50 entries of QUERIES, as
-# rotated in round 16 (verdict r15 #1: execute the staged rotation as
-# written in drafts_r16.py). Priority bands: (0) the 7 queries
-# REGISTERED this round (x124-x130 — staged + oracle-proven in r15,
-# never driver-checked). (1) the r12-stale cohort, recomputed from the
-# CORRECTNESS_r1-r15 union at registration time per the r15 "41 vs 40"
-# lesson: exactly 46 queries have latest driver check r12 (the 48
-# r12-checked minus x26/q67 re-checked in r15 — union math verified in
-# the registration session: freshness after r15 is 46 r12 / 50 r13 /
-# 50 r14 / 50 r15). 43 of the 46 fit: defer the THREE lightest by the
-# r15 gate-run warm time (q68 0.263s, x24_source_quota 0.318s,
-# x40_shuffle_shards 0.321s — re-verification value concentrates in
-# heavy plans) to r17, which must take them first (drafts_r17
-# docstring reserves the slots). 7 + 43 = 50. After this round no
-# registered query is staler than r13 except q68/x24/x40.
+# The external driver oracle-checks the first 50 entries of QUERIES:
+# _rotate_for_driver moves these names, in this order, to the front.
 _DRIVER_WINDOW = [
-    # (0) registered this round
     "x124_roc_auc",
     "x125_calibration",
     "x126_cohens_kappa",
@@ -2718,7 +2695,6 @@ _DRIVER_WINDOW = [
     "x128_bootstrap_ci",
     "x129_sprt",
     "x130_cuped",
-    # (1) the r12-stale cohort minus the three deferred lightest
     "q08", "q09", "q10",
     "q63", "q64", "q65", "q66", "q69", "q70", "q71", "q72", "q73",
     "x27_url_dedup", "x28_pii_redact", "x30_pack_sequences",

@@ -62,13 +62,15 @@ def streaming_dsir_ingest(
         dsir_score,
     )
 
-    # Static target counts: computed once, consumed by every epoch.
-    c_t = (
+    # Static target counts: collected once (at most ``buckets`` rows) and
+    # rebuilt as a local frame that every epoch consumes. Nothing stays
+    # persisted, and no epoch rescans the target corpus.
+    agg = (
         dsir_doc_buckets(target_df, id_col, text_col, buckets)
         .groupBy("b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c_t"))
-        .localCheckpoint()
     )
+    c_t = target_df.sparkSession.createDataFrame(agg.collect(), agg.schema)
 
     def step(batch_df, epoch_id, pin, prev):
         per_doc = pin(  # feeds the state merge AND the score join

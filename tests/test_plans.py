@@ -308,32 +308,45 @@ def test_sessionize_by_gap_rejects_nonpositive_gap(spark):
 
 def test_driver_window_invariants():
     """The driver oracle-checks only the FIRST 50 of QUERIES: the
-    window must hold exactly 50 unique registered names, lead the dict
-    in order, and every entry must carry an oracle (a rows-only check
-    in a window slot would silently weaken the round's gate).
-    _rotate_for_driver raises at import time; this pins the contract
-    in CI with a readable failure."""
-    from meshinsights_data_pipeline_spark.plans.queries import (
-        QUERIES,
-        _DRIVER_WINDOW,
-    )
+    window must hold exactly 50 unique registered names and lead the
+    dict in order. _rotate_for_driver raises at import time; this pins
+    the contract in CI with a readable failure."""
+    from meshinsights_data_pipeline_spark.plans.queries import _DRIVER_WINDOW
 
     assert len(_DRIVER_WINDOW) == 50
     assert len(set(_DRIVER_WINDOW)) == 50
     assert list(QUERIES)[:50] == list(_DRIVER_WINDOW)
-    missing_oracle = [n for n in _DRIVER_WINDOW if QUERIES[n].oracle is None]
-    assert not missing_oracle, missing_oracle
 
 
-def test_staged_drafts_do_not_collide_with_registered():
-    """Staged next-round anchors (plans/drafts_r17.py — update this
-    import at each registration) must not reuse a registered query
-    name — registration is a dict update, and a collision would
-    silently replace a driver-checked anchor."""
-    from meshinsights_data_pipeline_spark.plans.drafts_r17 import (
-        DRAFTS as NEXT,
-    )
-    from meshinsights_data_pipeline_spark.plans.queries import QUERIES
+def test_registration_rejects_a_repeated_name():
+    """QUERIES is built by one registration loop over the q, extension
+    and statistics mappings: a name two mappings share raises, instead
+    of the later entry silently replacing a checked query."""
+    from meshinsights_data_pipeline_spark.plans.queries import _register, q01, q02
 
-    overlap = sorted(set(NEXT) & set(QUERIES))
-    assert not overlap, overlap
+    first = {"q01": (q01, "SELECT 1")}
+    with pytest.raises(ValueError, match="q01"):
+        _register(first, {"q01": (q02, "SELECT 2")})
+    assert list(_register(first, {"q02": (q02, "SELECT 2")})) == ["q01", "q02"]
+
+
+def test_every_plans_builder_is_registered():
+    """Source-only guard (no Spark): every top-level ``qNN`` / ``xNN_*``
+    builder defined under ``plans/`` is a key of QUERIES, so an
+    oracle-proven builder cannot sit in the package unregistered."""
+    import ast
+    import pathlib
+    import re
+
+    import meshinsights_data_pipeline_spark.plans as plans
+
+    builder = re.compile(r"q\d+|x\d+_\w+")
+    unregistered = [
+        f"{path.name}:{node.lineno} {node.name}"
+        for path in sorted(pathlib.Path(plans.__file__).parent.glob("*.py"))
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.FunctionDef)
+        and builder.fullmatch(node.name)
+        and node.name not in QUERIES
+    ]
+    assert unregistered == []

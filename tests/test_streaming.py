@@ -1504,6 +1504,22 @@ def test_streaming_dsir_parity_and_retry(spark, tmp_path):
     assert after.count() == 4  # no duplicated score rows
 
 
+def test_streaming_dsir_build_leaves_no_persisted_rdd(spark, tmp_path):
+    """Building the DSIR twin collects the static target counts once and
+    persists nothing: the persisted RDD ids after the build are a subset
+    of those before it."""
+    from meshinsights_data_pipeline_spark.streaming import streaming_dsir_ingest
+
+    target = spark.createDataFrame(
+        [(100, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    streaming_dsir_ingest(target, counts_dir=str(tmp_path / "cnt"),
+                          scores_dir=str(tmp_path / "sc"))
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
 def test_streaming_bm25_parity_and_retry(spark, tmp_path):
     """Single-batch scores must equal the batch operator's scored frame
     exactly; a second batch's docs score against the MERGED
