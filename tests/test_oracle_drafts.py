@@ -1,7 +1,7 @@
-"""Oracle parity for the r14 anchors (plans/drafts_r14.py) — staged in
-r13, REGISTERED in r14 (so test_queries_oracle now covers them too;
-this file keeps the direct DRAFTS-pair gate as the registration-
-independent proof, the form that let them land pre-proven).
+"""Oracle parity for the statistics query set (plans/stats_queries.py),
+checked straight from its ``STATS_QUERIES`` pairs, independent of how
+``plans.queries`` registers them (test_queries_oracle checks the same
+queries through ``QUERIES``).
 
 Same gate as test_query_matches_oracle: row count, column names,
 portable output types, and canonicalized values vs DuckDB at sf0.01.
@@ -11,27 +11,15 @@ from __future__ import annotations
 
 import pytest
 
-from meshinsights_data_pipeline_spark.plans.drafts_r14 import (
-    DRAFTS as DRAFTS_R14,
-)
-from meshinsights_data_pipeline_spark.plans.drafts_r15 import (
-    DRAFTS as DRAFTS_R15,
-)
-from meshinsights_data_pipeline_spark.plans.drafts_r16 import (
-    DRAFTS as DRAFTS_R16,
-)
-from meshinsights_data_pipeline_spark.plans.drafts_r17 import (
-    DRAFTS as DRAFTS_R17,
-)
+from meshinsights_data_pipeline_spark.plans.stats_queries import STATS_QUERIES
 from tests.oracle_harness import compare
 
-DRAFTS = {**DRAFTS_R14, **DRAFTS_R15, **DRAFTS_R16, **DRAFTS_R17}
 SF_DIR = "/root/testdata/sf0.01"
 
 
-@pytest.mark.parametrize("name", sorted(DRAFTS))
+@pytest.mark.parametrize("name", sorted(STATS_QUERIES))
 def test_draft_matches_oracle(spark, name):
-    fn, sql = DRAFTS[name]
+    fn, sql = STATS_QUERIES[name]
     df = fn(spark, SF_DIR)
     r = compare(df, sql, SF_DIR)
     assert r["values_match"] and r["cols_match"] and r["rowcount_match"], r
