@@ -7,14 +7,100 @@ Each query is fully executed via a noop-format write — every row and column
 is produced JVM-side, nothing is collected to the driver, and the optimizer
 can't prune the projection the way a count() would let it. The session is
 warmed with a trivial job first so q01 doesn't absorb JVM startup.
+
+Every timing goes through two helpers: ``_noop_seconds`` times one build
+plus its noop write, and ``_interleaved`` runs named builds round-robin.
+The per-query pass, the composed-pipeline extras (one ``EXTRAS`` table),
+the self-adjudication pins, the sf1 row and ``tools_minibench.py`` all
+call them, so a timing means the same thing in every tool that reports it.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import sys
+import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from typing import Callable, NamedTuple
+
+from pyspark.sql import functions as F
+
+from bench_sf1 import DIMS, SCALED, ensure_sf1
+from meshinsights_data_pipeline_spark.analytics.corpus_pipeline import (
+    BENCHMARK_KEY,
+    build_corpus_pipeline,
+    run_corpus_prep,
+)
+from meshinsights_data_pipeline_spark.analytics.events_pipeline import (
+    build_events_pipeline,
+)
+from meshinsights_data_pipeline_spark.analytics.power_pipeline import (
+    run_power_analysis,
+)
+from meshinsights_data_pipeline_spark.core.context import PipelineContext
+from meshinsights_data_pipeline_spark.operators.abtest import (
+    cliffs_delta,
+    cuped_adjusted_means,
+    mann_whitney_u,
+    sprt_bernoulli,
+    welch_ttest,
+)
+from meshinsights_data_pipeline_spark.operators.bootstrap import (
+    bootstrap_mean_ci,
+)
+from meshinsights_data_pipeline_spark.operators.changepoint import (
+    cusum_changepoints,
+)
+from meshinsights_data_pipeline_spark.operators.components import (
+    connected_components,
+)
+from meshinsights_data_pipeline_spark.operators.corpus import (
+    source_js_divergence,
+    source_token_entropy,
+)
+from meshinsights_data_pipeline_spark.operators.dq import (
+    benford_deviation,
+    chi2_independence,
+)
+from meshinsights_data_pipeline_spark.operators.linkage import (
+    blocked_record_linkage,
+)
+from meshinsights_data_pipeline_spark.operators.mleval import (
+    calibration_report,
+    cohens_kappa,
+    roc_auc,
+)
+from meshinsights_data_pipeline_spark.operators.sessionize import sessionize
+from meshinsights_data_pipeline_spark.operators.similarity import (
+    embedding_neardup_pairs_lsh,
+)
+from meshinsights_data_pipeline_spark.operators.sketch import (
+    cms_counts,
+    cms_estimate,
+    hll_cardinality,
+    kmv_pairwise_overlap,
+)
+from meshinsights_data_pipeline_spark.operators.stats import ks_drift
+from meshinsights_data_pipeline_spark.operators.text import normalized_text
+from meshinsights_data_pipeline_spark.operators.trend import autocorrelation
+from meshinsights_data_pipeline_spark.plans.queries import QUERIES
+from meshinsights_data_pipeline_spark.session import get_spark, read_table
+from meshinsights_data_pipeline_spark.sources.layout import snapshot_overwrite
+from meshinsights_data_pipeline_spark.streaming import (
+    parallel_batch,
+    streaming_auc_ingest,
+    streaming_bootstrap_ingest,
+    streaming_calibration_ingest,
+    streaming_entropy_ingest,
+    streaming_exact_dedup,
+    streaming_jsd_ingest,
+    streaming_mann_whitney_ingest,
+    streaming_sprt_ingest,
+)
 
 
 def _regressed(sec: float, exp: float) -> bool:
@@ -27,6 +113,19 @@ def _regressed(sec: float, exp: float) -> bool:
     The slack is far below any real regression in the >=1s band the
     gates exist for."""
     return sec > 2.0 * exp and sec - exp > 0.25
+
+
+def _pin_verdict(pin: float, base: float | None,
+                 ctrl_factor: float | None) -> str:
+    """Self-adjudication verdict for a flagged query from its interleaved
+    pin. A failed pin (-1.0) proves nothing, so it never clears a flag."""
+    if pin < 0:
+        return "regressed"
+    if base and not _regressed(pin, base):
+        return "cleared-by-pin"
+    if ctrl_factor is not None and ctrl_factor >= 1.5:
+        return f"host-inflated (controls {ctrl_factor}x)"
+    return "regressed"
 
 
 def _spin_once(dur: float) -> int:
@@ -57,20 +156,518 @@ def _effective_cores(workers: int = 32, dur: float = 0.25) -> float:
         return -1.0
 
 
+# ---------------------------------------------------------------------------
+# The timing helpers
+# ---------------------------------------------------------------------------
+
+
+def _noop(frame) -> None:
+    frame.write.format("noop").mode("overwrite").save()
+
+
+def _warm_up(spark, sf_dir: str) -> None:
+    """JVM codegen, the parquet datasource and the noop write path: the
+    first use of each costs ~1-2s of one-time init that would otherwise
+    be mis-attributed to whichever timed build runs first."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    _noop(read_table(spark, sf_dir, "region"))
+
+
+def _noop_seconds(spark, build: Callable) -> float:
+    """Wall seconds of ``build(spark)`` plus a noop write of what it
+    returns, so plan building and execution are both timed. A tuple holds
+    independent frames, written through a 3-thread pool so their actions
+    overlap (the ``pooled_threadpool3`` methodology); ``None``
+    means the build ran its own actions (a pipeline, a streaming query)."""
+    t0 = time.perf_counter()
+    out = build(spark)
+    if isinstance(out, tuple):
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            list(pool.map(_noop, out))
+    elif out is not None:
+        _noop(out)
+    return round(time.perf_counter() - t0, 3)
+
+
+def _interleaved(spark, builds: dict[str, Callable],
+                 rounds: int) -> dict[str, list[float]]:
+    """``rounds`` passes over ``builds``, each timed by ``_noop_seconds``:
+    interleaved, not banded, so a transient host stall spreads over every
+    name instead of landing on one, and no run rides the previous run's
+    still-warm shuffle files. A run that raises is recorded as -1.0 and
+    the others go on."""
+    runs: dict[str, list[float]] = {n: [] for n in builds}
+    for _ in range(rounds):
+        for name, build in builds.items():
+            try:
+                runs[name].append(_noop_seconds(spark, build))
+            except Exception as exc:  # noqa: BLE001 - record, keep benching
+                print(f"bench: {name} failed: {exc}", file=sys.stderr)
+                runs[name].append(-1.0)
+    return runs
+
+
+def _best(runs: list[float]) -> float:
+    """Min over the runs that succeeded; -1.0 when every run failed."""
+    return min((r for r in runs if r >= 0), default=-1.0)
+
+
+def _query_build(query, sf_dir: str) -> Callable:
+    return lambda spark: query.spark(spark, sf_dir)
+
+
+# ---------------------------------------------------------------------------
+# Extras: composed pipelines timed end to end, one row each
+# ---------------------------------------------------------------------------
+
+POOLED = "pooled_threadpool3"
+PARALLEL_BATCH = "parallel_batch"
+
+
+class Extra(NamedTuple):
+    """One composed-pipeline extra.
+
+    ``stage(spark, sf_dir)`` is a context manager: it reads (and, for a
+    streaming row, stages to a temp dir it owns) the inputs outside the
+    timed region and yields the timed ``build(spark)``. ``methodology``
+    names how independent parts overlap (``POOLED``: the build returns a
+    tuple of frames; ``PARALLEL_BATCH``: twins share one micro-batch
+    through ``streaming.parallel_batch``); untagged rows are serial
+    compositions. A ``fresh_state`` row starts from a fresh checkpoint
+    every run (state rebuild + watermark bookkeeping IS the streaming cost
+    model, so no run is warm): its value is the min of its two runs.
+    """
+
+    name: str
+    stage: Callable
+    methodology: str | None = None
+    fresh_state: bool = False
+
+
+@contextmanager
+def _power_pipeline(spark, sf_dir):
+    # The analytics workload (GMM variance pipeline) is not SQL-expressible,
+    # so it is benchmarked apart from the declared query set.
+    ev = read_table(spark, sf_dir, "events").select(
+        F.col("ts"),
+        F.col("event_type").alias("tstate"),
+        (F.abs(F.col("value")) * 100).alias("energy"),
+        "user_id",
+    )
+    ev = sessionize(ev, "tstate", ["ts"], ["user_id"]).withColumnRenamed(
+        "ts", "timeStamp"
+    )
+
+    def build(_spark):
+        run_power_analysis(ev)
+
+    yield build
+
+
+@contextmanager
+def _corpus_pipeline(spark, sf_dir):
+    # quality gate -> dedup -> near-dup collapse -> decontamination -> PII
+    # -> quota -> split -> chunking, timed to one action on the chunks.
+    docs = read_table(spark, sf_dir, "documents")
+    bench_slice = docs.filter(F.col("source") == "src0")
+    yield lambda _spark: run_corpus_prep(
+        docs, benchmark=bench_slice, contamination_threshold=0.8,
+        quota_n=1000, chunk_tokens=64, span_excise_n=5,
+    ).processed_data["corpus.chunks"]
+
+
+@contextmanager
+def _events_pipeline(spark, sf_dir):
+    # sessionize -> attribution -> outliers -> time-weighted avg -> report;
+    # the report step's bounded aggregates are the terminal actions, so
+    # the time covers every composed frame.
+    ev = read_table(spark, sf_dir, "events")
+    pipe = build_events_pipeline()
+
+    def build(_spark):
+        pipe.run(PipelineContext(
+            pipeline_name="events_analytics", correlation_id="bench",
+            raw_data=ev,
+        ))
+
+    yield build
+
+
+@contextmanager
+def _record_linkage(spark, sf_dir):
+    # examples/record_linkage.py composed: blocked linkage -> connected
+    # components -> golden-record anti-join. A regression inside the
+    # linkage->CC composition is invisible to the per-query gates.
+    cust = read_table(spark, sf_dir, "customer")
+
+    def build(_spark):
+        pairs = blocked_record_linkage(
+            cust, "c_custkey", ["c_nationkey", "c_mktsegment"],
+            "c_name", "c_acctbal", numeric_scale=2000.0, threshold=0.9,
+        )
+        comp = connected_components(pairs, "id_a", "id_b")
+        losers = comp.filter(F.col("id") != F.col("cluster_id")).select(
+            F.col("id").alias("c_custkey")
+        )
+        return cust.join(losers, "c_custkey", "left_anti")
+
+    yield build
+
+
+@contextmanager
+def _drift_monitoring(spark, sf_dir):
+    # examples/drift_monitoring.py's core: per-user CUSUM changepoints ->
+    # alarm triage summary (the composed plan of the x104 anchor).
+    ev = read_table(spark, sf_dir, "events")
+
+    def build(_spark):
+        scored = cusum_changepoints(
+            ev, "ts", ["user_id"], "value", "event_id",
+            target=50.0, slack=12.0, threshold=95.0,
+        )
+        alarms = scored.filter(F.col("alarm_up") | F.col("alarm_down"))
+        return alarms.groupBy("user_id").agg(
+            F.min("ts").alias("first_alarm"),
+            F.sum(F.col("alarm_up").cast("int")).alias("n_up"),
+            F.sum(F.col("alarm_down").cast("int")).alias("n_down"),
+        )
+
+    yield build
+
+
+# The POOLED rows compose INDEPENDENT analyses, so their actions overlap
+# through _noop_seconds' thread pool (as PARALLEL_BATCH overlaps the
+# stat-ingest twins); each operator's own cost stays gated by its anchor
+# query, and plans still build inside the timed region. Serial-composition
+# numbers live in BENCH_r15.json and the pre-r16 gate records.
+
+
+@contextmanager
+def _data_quality(spark, sf_dir):
+    # examples/data_quality.py's core: KS drift + Benford conformance +
+    # token entropy over three tables (anchors x107/x109/x110).
+    ev = read_table(spark, sf_dir, "events")
+    li = read_table(spark, sf_dir, "lineitem")
+    docs = read_table(spark, sf_dir, "documents")
+    yield lambda _spark: (
+        ks_drift(ev, "event_type", "value"),
+        benford_deviation(li, "l_returnflag", "l_extendedprice"),
+        source_token_entropy(docs, "source", "text"),
+    )
+
+
+@contextmanager
+def _stat_tests(spark, sf_dir):
+    # Welch t + Mann-Whitney + chi-square independence + lag-k ACF + JS
+    # mix divergence (anchors x116/x120/x117/x118/x119).
+    ev = read_table(spark, sf_dir, "events")
+    orders = read_table(spark, sf_dir, "orders")
+    docs = read_table(spark, sf_dir, "documents")
+    metric = ev.select(
+        F.col("event_type").alias("exp"),
+        F.when(F.col("user_id") % 2 == 0, "control")
+        .otherwise("t1").alias("arm"),
+        F.col("value"),
+    )
+    yield lambda _spark: (
+        welch_ttest(metric, "exp", "arm", "value", control_label="control"),
+        mann_whitney_u(metric, "exp", "arm", "value",
+                       control_label="control"),
+        chi2_independence(orders, "o_orderstatus", "o_orderpriority"),
+        autocorrelation(
+            ev.filter(F.col("user_id") < 40), "ts",
+            ["user_id"], "value", "event_id", lags=3,
+        ),
+        source_js_divergence(docs, "source", "text"),
+    )
+
+
+@contextmanager
+def _judge_eval(spark, sf_dir):
+    # ROC-AUC + calibration report + Cohen's kappa + Cliff's delta +
+    # bootstrap CI + SPRT decisions + CUPED (anchors x124-x130).
+    ev = read_table(spark, sf_dir, "events")
+    docs = read_table(spark, sf_dir, "documents")
+    scored = ev.select(
+        F.col("event_type"),
+        (F.col("user_id") % 2 == 0).alias("label"),
+        F.col("value"),
+    )
+    conf = ev.select(
+        F.col("event_type"),
+        (F.col("value").cast("double") / F.lit(100.0)).alias("score"),
+        (F.col("user_id") % 3 == 0).alias("label"),
+    )
+    raters = docs.select(
+        F.col("source"),
+        F.col("lang").alias("rater_a"),
+        F.when(F.col("doc_id") % 7 == 0, F.lit("xx"))
+        .otherwise(F.col("lang")).alias("rater_b"),
+    )
+    arms = ev.select(
+        F.col("event_type").alias("experiment"),
+        F.when(F.col("user_id") % 2 == 0, "control")
+        .otherwise("t1").alias("arm"),
+        F.col("value"),
+    )
+    yield lambda _spark: (
+        roc_auc(scored, ["event_type"], "label", "value"),
+        calibration_report(conf, ["event_type"], "score", "label", bins=10),
+        cohens_kappa(raters, ["source"], "rater_a", "rater_b"),
+        cliffs_delta(arms, "experiment", "arm", "value",
+                     control_label="control"),
+        bootstrap_mean_ci(ev, ["event_type"], "value", "event_id", b=60),
+        sprt_bernoulli(
+            arms.withColumn("conv", F.col("value") > 30),
+            "experiment", "arm", "conv", p0=0.3, p1=0.35,
+        ),
+        cuped_adjusted_means(
+            arms.withColumn(
+                "pre_metric",
+                F.floor(F.col("value").cast("double") / F.lit(10.0))
+                .cast("double"),
+            ),
+            "experiment", "arm", "value", "pre_metric",
+        ),
+    )
+
+
+@contextmanager
+def _sketch_profile(spark, sf_dir):
+    # The constant-memory profiling pass a 100 TB corpus runs instead of
+    # exact distinct/frequency/overlap: HLL per-source cardinality, CMS
+    # hot-token estimates over the exploded token stream, KMV pairwise
+    # source overlap (correctness: the x131-x133 anchors at sf0.01).
+    docs = read_table(spark, sf_dir, "documents")
+    toks = docs.filter(
+        F.col("source").isNotNull() & F.col("text").isNotNull()
+    ).select(
+        "source",
+        F.explode(F.split(normalized_text(F.col("text")), " ")).alias("token"),
+    ).filter(F.col("token") != "")
+    items = (
+        toks.groupBy("token")
+        .agg(F.count(F.lit(1)).alias("_cnt"))
+        .orderBy(F.col("_cnt").desc(), F.col("token").asc())
+        .limit(15)
+        .select("token")
+    )
+    yield lambda _spark: (
+        hll_cardinality(docs, ["source"], "text", p=10),
+        cms_estimate(
+            cms_counts(toks, ["source"], "token", depth=4, width=1024),
+            ["source"], items, "token", depth=4, width=1024,
+        ),
+        kmv_pairwise_overlap(docs, "source", "text", k=128),
+    )
+
+
+def _file_stream(spark, path: str):
+    return spark.readStream.schema(spark.read.parquet(path).schema).parquet(
+        path
+    )
+
+
+def _drain(writer, checkpoint: str) -> None:
+    """One availableNow run of a streaming query over everything staged."""
+    writer.option("checkpointLocation", checkpoint).trigger(
+        availableNow=True
+    ).start().awaitTermination(300)
+
+
+@contextmanager
+def _streaming_exact_dedup(spark, sf_dir):
+    # Bounded-stream exact dedup over the documents table (one micro-batch
+    # run, availableNow): the §2.10 throughput signal.
+    with tempfile.TemporaryDirectory(
+        prefix="bench_stream_", ignore_cleanup_errors=True
+    ) as stage:
+        src = f"{stage}/src"
+        read_table(spark, sf_dir, "documents").withColumn(
+            "ts",
+            F.expr(
+                "timestamp'2024-01-01 00:00:00' + "
+                "make_interval(0,0,0,0,0,0,doc_id)"
+            ),
+        ).write.parquet(src)
+        attempt = itertools.count()
+
+        def build(spark):
+            out = streaming_exact_dedup(
+                _file_stream(spark, src), "doc_id", "text", ts_col="ts"
+            )
+            _drain(out.writeStream.outputMode("append").format("noop"),
+                   f"{stage}/ckpt{next(attempt)}")
+
+        yield build
+
+
+# Empty state of the seven stat-ingest twins, seeded fresh every run.
+_STAT_STATES = {
+    "jsd_state": "source string, _tok long, _c long",
+    "ent_state": "source string, _tok long, _c long",
+    "mw_state": "experiment string, arm string, _v double, _c long",
+    "auc_state": "experiment string, _v double, _pos long, _neg long",
+    "cal_state": (
+        "experiment string, _b int, _n long, _np long,"
+        " _ssum decimal(38,12), _rsum decimal(38,12)"
+    ),
+    "bs_state": (
+        "experiment string, _b int, _s decimal(38,12), _n_w long, _rows long"
+    ),
+    "sprt_state": "experiment string, arm string, n long, x long",
+}
+
+
+@contextmanager
+def _streaming_stat_ingest(spark, sf_dir):
+    # The hashed-state JSD + entropy twins over the documents stream, and
+    # over the events stream the Mann-Whitney, AUC, calibration,
+    # Poisson-bootstrap and SPRT twins: the streaming statistical surface's
+    # merge-state + epoch-report plumbing at bench scale (the batch anchors
+    # x110/x119/x120/x124/x125/x128/x129 cover the shared count stages).
+    with tempfile.TemporaryDirectory(
+        prefix="bench_statstream_", ignore_cleanup_errors=True
+    ) as stage:
+        docs = read_table(spark, sf_dir, "documents")
+        # one event frame feeds all five event-side twins: the MW arms,
+        # the x124 AUC labeling, the x125 score/100 framing, the x128
+        # bootstrap id surface, and the SPRT conversions
+        ev = read_table(spark, sf_dir, "events").select(
+            F.col("event_type").alias("experiment"),
+            F.when(F.col("user_id") % 2 == 0, "control")
+            .otherwise("t1").alias("arm"),
+            F.col("value"),
+            F.col("event_id"),
+            (F.col("user_id") % 2 == 0).alias("label"),
+            (F.col("value").cast("double") / F.lit(100.0)).alias("score"),
+            (F.col("user_id") % 3 == 0).alias("converted"),
+        )
+        dsrc, esrc = f"{stage}/docs", f"{stage}/events"
+        docs.write.parquet(dsrc)
+        ev.write.parquet(esrc)
+        attempt = itertools.count()
+
+        def build(spark):
+            root = f"{stage}/run{next(attempt)}"
+            # independent tiny writes: same overlap as the twins
+            with ThreadPoolExecutor(max_workers=7) as seed_pool:
+                list(seed_pool.map(
+                    lambda kv: snapshot_overwrite(
+                        spark.createDataFrame([], kv[1]),
+                        f"{root}/{kv[0]}", -1,
+                    ),
+                    _STAT_STATES.items(),
+                ))
+            docs_batch = parallel_batch(
+                streaming_jsd_ingest(
+                    docs, counts_dir=f"{root}/jsd_state",
+                    report_dir=f"{root}/jsd_report",
+                ),
+                streaming_entropy_ingest(
+                    docs, counts_dir=f"{root}/ent_state",
+                    report_dir=f"{root}/ent_report",
+                ),
+            )
+            _drain(_file_stream(spark, dsrc).writeStream.foreachBatch(
+                docs_batch
+            ), f"{root}/ckpt_docs")
+            events_batch = parallel_batch(
+                streaming_mann_whitney_ingest(
+                    ev, cells_dir=f"{root}/mw_state",
+                    report_dir=f"{root}/mw_report",
+                ),
+                streaming_auc_ingest(
+                    ev, "experiment", "label", "value",
+                    cells_dir=f"{root}/auc_state",
+                    report_dir=f"{root}/auc_report",
+                ),
+                streaming_calibration_ingest(
+                    ev, "experiment", "score", "converted", bins=10,
+                    state_dir=f"{root}/cal_state",
+                    report_dir=f"{root}/cal_report",
+                ),
+                streaming_bootstrap_ingest(
+                    ev, "experiment", "value", "event_id", b=60,
+                    state_dir=f"{root}/bs_state",
+                    report_dir=f"{root}/bs_report",
+                ),
+                streaming_sprt_ingest(
+                    ev, "experiment", "arm", "converted",
+                    p0=0.30, p1=0.36,
+                    cells_dir=f"{root}/sprt_state",
+                    report_dir=f"{root}/sprt_report",
+                ),
+            )
+            _drain(_file_stream(spark, esrc).writeStream.foreachBatch(
+                events_batch
+            ), f"{root}/ckpt_events")
+
+        yield build
+
+
+EXTRAS = (
+    Extra("power_pipeline_e2e", _power_pipeline),
+    Extra("corpus_pipeline_e2e", _corpus_pipeline),
+    Extra("events_pipeline_e2e", _events_pipeline),
+    Extra("record_linkage_e2e", _record_linkage),
+    Extra("drift_monitoring_e2e", _drift_monitoring),
+    Extra("data_quality_e2e", _data_quality, POOLED),
+    Extra("stat_tests_e2e", _stat_tests, POOLED),
+    Extra("judge_eval_e2e", _judge_eval, POOLED),
+    Extra("sketch_profile_e2e", _sketch_profile, POOLED),
+    Extra("streaming_exact_dedup_e2e", _streaming_exact_dedup,
+          fresh_state=True),
+    Extra("streaming_stat_ingest_e2e", _streaming_stat_ingest,
+          PARALLEL_BATCH, fresh_state=True),
+)
+
+
+def extras_methodology(rows=EXTRAS) -> dict[str, list[str]]:
+    """Methodology tag -> the extras measured that way. Every record
+    carries it, so no consumer compares pooled and serial numbers
+    silently (the pooled extras changed meaning mid-series in r16)."""
+    tags: dict[str, list[str]] = {}
+    for row in rows:
+        if row.methodology:
+            tags.setdefault(row.methodology, []).append(row.name)
+    return tags
+
+
+def _run_extras(spark, sf_dir: str):
+    """Two timed runs of every extra. Like the queries, the first run is
+    the cold value (the composed plans are huge, so first-run codegen
+    dominates: corpus e2e measured 27s cold vs 13s steady at sf0.1) and
+    the second is the warm value, except for a ``fresh_state`` row (see
+    ``Extra``): the min strips the first run's one-time streaming JIT and
+    transient host contention, measured as a 2-15x swing while every warm
+    query moved <10%. A row that raises lands in the failed map."""
+    extras: dict[str, float] = {}
+    extras_cold: dict[str, float] = {}
+    failed: dict[str, str] = {}
+    for row in EXTRAS:
+        try:
+            with row.stage(spark, sf_dir) as build:
+                runs = [_noop_seconds(spark, build) for _ in range(2)]
+        except Exception as exc:  # noqa: BLE001 - record, keep benching
+            print(f"bench: {row.name} failed: {exc}", file=sys.stderr)
+            failed[row.name] = str(exc)
+            continue
+        extras_cold[row.name] = runs[0]
+        extras[row.name] = min(runs) if row.fresh_state else runs[1]
+    return extras, extras_cold, failed
+
+
+# ---------------------------------------------------------------------------
+# Corpus steps and the sf1 scaling row
+# ---------------------------------------------------------------------------
+
+
 def _corpus_step_times(spark, data_dir: str) -> dict[str, float]:
     """Per-step timings of the corpus pipeline over ``data_dir``'s
     documents, materializing after every step (noop write +
     localCheckpoint barrier) so each delta is additive and attributable.
     Shared by the sf0.1 breakdown and the sf1 scaling row."""
-    from pyspark.sql import functions as F
-
-    from meshinsights_data_pipeline_spark.analytics.corpus_pipeline import (
-        BENCHMARK_KEY,
-        build_corpus_pipeline,
-    )
-    from meshinsights_data_pipeline_spark.core.context import PipelineContext
-    from meshinsights_data_pipeline_spark.session import read_table
-
     docs = read_table(spark, data_dir, "documents")
     pipe = build_corpus_pipeline(
         contamination_threshold=0.8, quota_n=1000, chunk_tokens=64,
@@ -87,11 +684,220 @@ def _corpus_step_times(spark, data_dir: str) -> dict[str, float]:
             continue
         t0 = time.perf_counter()
         ctx = proc(ctx)
-        out = ctx.processed_data.get("corpus.chunks", ctx.raw_data)
-        out.write.format("noop").mode("overwrite").save()
+        _noop(ctx.processed_data.get("corpus.chunks", ctx.raw_data))
         ctx.raw_data = ctx.raw_data.localCheckpoint()
         steps[proc.name] = round(time.perf_counter() - t0, 3)
     return steps
+
+
+def run_sf1(spark, queries, names: list[str], sf1_dir: str) -> dict[str, float]:
+    """Min of TWO timed noop-write runs per query at sf1 — the same
+    steady-state discipline as the warm sf0.1 pass, so the published
+    ratio measures the PLAN on 10x data, not first-run state. A query
+    whose runs all fail reads -1.0.
+
+    The tables are page-cache-warmed first: without this, whichever
+    query the roster happens to order FIRST pays the whole dataset's
+    cold read and shows a phantom 2x — the r11 'x26 sf1 doubled' and
+    r12 'x23 sf1 doubled' moves were exactly this, flipping with the
+    roster order, not plan regressions. One full scan per table makes
+    every ratio measure compute, matching the warm sf0.1 numerator.
+
+    The second timed pass exists because a query's FIRST sf1 run can
+    carry a one-time codegen surcharge — AQE picks different physical
+    plans at 10x data, so the sf0.1 warm pass's compiled code doesn't
+    apply (x23 min-label CC: first sf1 run 10.0s, steady-state 4.6s;
+    x26 star: 8.9 first vs 4.2 steady — the r12 verdict's two-figures
+    discrepancy). That surcharge is JVM work, constant in data size —
+    noise at a real 10x/100x scale step — so min-of-2 is the honest
+    scaling figure (r12 verdict #3). Runs as two full passes (pass 1
+    warms every roster plan, pass 2 is steady) rather than
+    back-to-back per query, so pass 2 can't ride pass 1's still-warm
+    executor-local shuffle files for the same stage boundaries."""
+    for t in (*SCALED, *DIMS):
+        try:
+            _noop(read_table(spark, sf1_dir, t))
+        except Exception as exc:  # noqa: BLE001 - warm-up must not kill bench
+            print(f"bench: sf1 warm-up {t} failed: {exc}", file=sys.stderr)
+    runs = _interleaved(
+        spark, {n: _query_build(queries[n], sf1_dir) for n in names}, rounds=2
+    )
+    return {n: _best(v) for n, v in runs.items()}
+
+
+def _sf1_rows(spark, queries, sf_dir: str, timings: dict[str, float],
+              corpus_steps: dict[str, float]):
+    """The sf1 scaling row: the slowest queries (by this run's warm
+    timings) against a 10x-scaled dataset, turning the "would this plan
+    survive 10x?" audit into a measured curve — sf1_ratio ~10 is linear
+    in data (ideal for scan-bound work), >>10 means a superlinear
+    shuffle/pair blowup that 100 TB would amplify. The scaled tables are
+    derived from ``sf_dir`` by ``bench_sf1.ensure_sf1``. Returns the
+    (queries, autobits, corpus steps) rows; a part that fails stays empty.
+    """
+    sf1_timings: dict[str, float] = {}
+    sf1_autobits: dict[str, float] = {}
+    sf1_steps: dict[str, dict[str, float]] = {}
+    try:
+        # every query at >=1.0s warm (not just the top 10): r9's top-10
+        # cutoff left a 1.2-1.8s band (x46/x07/x29/q47/x52) with no 10x
+        # measurement, exactly where a superlinear surprise could hide;
+        # r10's 18-query cap cut off at 1.47s, leaving the 1.2-1.45s
+        # band (x33/x10/x39/q47/x53/x55/x77/x37) unmeasured — VERDICT
+        # r10 item 8 widened the band floor and cap.
+        # Floor of 10, cap of 26 to bound the row's wall time.
+        by_time = [
+            n for n, _ in sorted(timings.items(), key=lambda kv: -kv[1])
+            if timings[n] >= 0
+        ]
+        n_band = sum(1 for n in by_time if timings[n] >= 1.0)
+        slowest = by_time[: max(10, min(n_band, 26))]
+        # x12's scaling claim (auto-bits LSH ~linear in N) is graded
+        # by its measured ratio — always include it in the sf1 row
+        if "x12_embedding_neardup_lsh" not in slowest:
+            slowest.append("x12_embedding_neardup_lsh")
+        sf1_dir = ensure_sf1(spark, sf_dir)
+        sf1_timings = run_sf1(spark, queries, slowest, sf1_dir)
+    except Exception as exc:  # noqa: BLE001
+        print(f"bench: sf1 scaling row failed: {exc}", file=sys.stderr)
+        return sf1_timings, sf1_autobits, sf1_steps
+
+    # The declared x12 runs auto-bits itself (bits derived from the exact
+    # corpus count, mirrored in the oracle); this row keeps the direct
+    # operator-level measurement for continuity with r8's BENCH_DETAIL.
+    def _autobits_sec(d: str) -> float:
+        emb = read_table(spark, d, "embeddings")
+
+        def build(_spark):
+            return embedding_neardup_pairs_lsh(
+                emb, threshold=0.4, bits=4, tables=4, seed=7,
+                target_bucket_rows=64,
+            )
+
+        _noop_seconds(spark, build)  # cold
+        return _noop_seconds(spark, build)
+
+    try:
+        base = _autobits_sec(sf_dir)
+        scaled = _autobits_sec(sf1_dir)
+        sf1_autobits = {
+            "sf01_sec": base,
+            "sf1_sec": scaled,
+            "ratio": round(scaled / base, 1) if base > 0 else -1.0,
+        }
+    except Exception as exc:  # noqa: BLE001
+        print(f"bench: sf1 autobits row failed: {exc}", file=sys.stderr)
+
+    # 10x curve for the corpus-pipeline STEPS (neardup_collapse is the
+    # most expensive step): the same per-step barriered loop over the sf1
+    # documents; ratio ~10 is linear in data, >>10 is the x12 trigger.
+    if corpus_steps:
+        try:
+            sf1_steps = {
+                name: {
+                    "sf01_sec": corpus_steps[name],
+                    "sf1_sec": sec,
+                    "ratio": round(sec / corpus_steps[name], 1)
+                    if corpus_steps[name] > 0 else -1.0,
+                }
+                for name, sec in _corpus_step_times(spark, sf1_dir).items()
+                if name in corpus_steps
+            }
+        except Exception as exc:  # noqa: BLE001
+            print(f"bench: sf1 step scaling failed: {exc}", file=sys.stderr)
+    return sf1_timings, sf1_autobits, sf1_steps
+
+
+# ---------------------------------------------------------------------------
+# The record
+# ---------------------------------------------------------------------------
+
+
+def _short(name: str) -> str:
+    # Compact-line keys only: extension queries collapse to their
+    # FULL numeric prefix ("x26_dedup_clusters_star" -> "x26",
+    # "x110_token_entropy" -> "x110") to keep the one-line JSON
+    # inside the ~2000-char stdout tail the harness reads. The prefix must
+    # be the whole digit run: the earlier fixed name[:3] collided
+    # three-digit queries with two-digit ones (x110/x114 -> "x11",
+    # overwriting x11's value in the committed compact record).
+    # Full names always live in BENCH_DETAIL.json.
+    if name[0] == "x" and name[1:2].isdigit():
+        i = 1
+        while i < len(name) and name[i].isdigit():
+            i += 1
+        return name[:i]
+    return name
+
+
+def _compact_line(detail: dict, cores: list) -> str:
+    """The last stdout line. The harness captures only the LAST ~2000
+    chars of stdout and parses the final JSON line from that tail (round
+    3's line, with cold+warm dicts for 70 queries, overflowed it and
+    parsed as null), so full detail goes to BENCH_DETAIL.json + the
+    committed BENCH_GATE_LOG.jsonl and this line is a compact headline.
+
+    Budget 1500 chars, not the harness's full ~2000: the tail window may
+    be combined with trailing stderr/log noise, and the whole compact
+    line must sit INSIDE it (the r13 tail started mid-JSON). Shed order:
+    corpus_steps, extras, then per-query times shrink to the slowest-N
+    that fit, with explicit queries_shown/_total markers."""
+    timings = detail["queries"]
+    compact = {
+        "metric": detail["metric"],
+        "value": detail["value"],
+        "unit": detail["unit"],
+        "cores": cores,
+        "queries": {_short(k): round(v, 2) for k, v in timings.items()},
+        "extras": {k: round(v, 2) for k, v in detail["extras"].items()},
+        # pooled/overlapped extras by name (full map in the gate record)
+        "extras_pooled": sorted(
+            n for ns in detail["extras_methodology"].values() for n in ns
+        ),
+        "corpus_steps": {
+            k: round(v, 2) for k, v in detail["corpus_steps"].items()
+        },
+        "sf": detail["sf"],
+    }
+    for key in ("step_regressions", "query_regressions", "extra_regressions"):
+        if detail[key]:
+            compact[key] = detail[key]
+    if detail["adjudication"]:
+        compact["adjudication"] = {
+            _short(k): v["verdict"] for k, v in detail["adjudication"].items()
+        }
+    if detail["sf1_slowest"]:
+        compact["sf1_slowest"] = {
+            _short(k): round(v, 1) for k, v in detail["sf1_slowest"].items()
+        }
+    if detail["sf1_steps"]:
+        compact["sf1_steps"] = {
+            k: v["ratio"] for k, v in detail["sf1_steps"].items()
+        }
+    budget = 1500
+    line = json.dumps(compact, separators=(",", ":"))
+    if len(line) > budget:
+        compact.pop("corpus_steps", None)
+        line = json.dumps(compact, separators=(",", ":"))
+    if len(line) > budget:
+        compact.pop("extras", None)
+        compact.pop("extras_pooled", None)
+        line = json.dumps(compact, separators=(",", ":"))
+    n_show = 60
+    by_desc = sorted(timings.items(), key=lambda kv: -kv[1])
+    while len(line) > budget and n_show >= 10:
+        compact["queries"] = {
+            _short(k): round(v, 2) for k, v in by_desc[:n_show]
+        }
+        compact["queries_shown"] = min(n_show, len(timings))
+        compact["queries_total"] = len(timings)
+        # A query absent from a truncated compact record is NOT dropped:
+        # it ran faster than this cutoff (the slowest unshown timing).
+        if len(timings) > n_show:
+            compact["shown_cutoff"] = round(by_desc[n_show][1], 2)
+        line = json.dumps(compact, separators=(",", ":"))
+        n_show -= 10
+    return line
 
 
 def main() -> None:
@@ -99,19 +905,9 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     t_start = time.time()
     cores_start = _effective_cores()
-
-    from meshinsights_data_pipeline_spark.session import get_spark
-    from meshinsights_data_pipeline_spark.plans.queries import QUERIES
-
     os.environ["SPARK_GRAFT_CPUS"] = cpus
     spark = get_spark("mesh-bench")
-    # Warm-up: JVM codegen, the parquet datasource, and the noop write path
-    # (first use of each costs ~1-2s of one-time init that would otherwise
-    # be mis-attributed to whichever query runs first).
-    from meshinsights_data_pipeline_spark.session import read_table
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    read_table(spark, sf_dir, "region").write.format("noop").mode("overwrite").save()
+    _warm_up(spark, sf_dir)
 
     try:
         sf = float(os.path.basename(os.path.normpath(sf_dir)).replace("sf", ""))
@@ -137,14 +933,9 @@ def main() -> None:
     timings: dict[str, float] = {}
     timings_cold: dict[str, float] = {}
     for name in sorted(QUERIES):
-        q = QUERIES[name]
-        runs = []
+        build = _query_build(QUERIES[name], sf_dir)
         try:
-            for _ in range(2):
-                t0 = time.perf_counter()
-                df = q.spark(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(round(time.perf_counter() - t0, 3))
+            runs = [_noop_seconds(spark, build) for _ in range(2)]
         except Exception as exc:  # noqa: BLE001 - record, keep benching
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
             timings[name] = -1.0
@@ -157,680 +948,13 @@ def main() -> None:
             # The stability run is OPTIONAL: a transient failure here must
             # not discard the two measurements already in hand.
             try:
-                t0 = time.perf_counter()
-                q.spark(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(round(time.perf_counter() - t0, 3))
+                runs.append(_noop_seconds(spark, build))
             except Exception as exc:  # noqa: BLE001
                 print(f"bench: {name} third run failed: {exc}", file=sys.stderr)
         timings_cold[name] = runs[0]
         timings[name] = min(runs[1:])
 
-    # The analytics workload (GMM variance pipeline) is not SQL-expressible
-    # so it is benchmarked separately from the declared query set. Extras
-    # get the same cold/warm treatment as the queries: the composed
-    # pipeline plans are huge, so first-run codegen dominates (corpus e2e
-    # measured 27s cold vs 13s steady at sf0.1) and varies run-to-run;
-    # the warm number measures the engine.
-    extras: dict[str, float] = {}
-    extras_cold: dict[str, float] = {}
-    extras_failed: dict[str, str] = {}  # name -> error, for extras that raised
-    try:
-        from pyspark.sql import functions as F
-
-        from meshinsights_data_pipeline_spark.analytics.power_pipeline import (
-            run_power_analysis,
-        )
-        from meshinsights_data_pipeline_spark.operators.sessionize import sessionize
-        from meshinsights_data_pipeline_spark.session import read_table
-
-        ev = read_table(spark, sf_dir, "events")
-        ev = ev.select(
-            F.col("ts"),
-            F.col("event_type").alias("tstate"),
-            (F.abs(F.col("value")) * 100).alias("energy"),
-            "user_id",
-        )
-        ev = sessionize(ev, "tstate", ["ts"], ["user_id"]).withColumnRenamed(
-            "ts", "timeStamp"
-        )
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            run_power_analysis(ev)
-            runs.append(round(time.perf_counter() - t0, 3))
-        extras_cold["power_pipeline_e2e"] = runs[0]
-        extras["power_pipeline_e2e"] = runs[1]
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: power pipeline failed: {exc}", file=sys.stderr)
-        extras_failed["power_pipeline_e2e"] = str(exc)
-
-    # Corpus-prep Pipeline end-to-end (quality gate -> dedup -> near-dup
-    # collapse -> decontamination -> PII -> quota -> split -> chunking),
-    # timed to one terminal action on the chunks table.
-    try:
-        from pyspark.sql import functions as F
-
-        from meshinsights_data_pipeline_spark.analytics.corpus_pipeline import (
-            run_corpus_prep,
-        )
-        from meshinsights_data_pipeline_spark.session import read_table
-
-        docs = read_table(spark, sf_dir, "documents")
-        bench_slice = docs.filter(F.col("source") == "src0")
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            ctx = run_corpus_prep(
-                docs, benchmark=bench_slice, contamination_threshold=0.8,
-                quota_n=1000, chunk_tokens=64, span_excise_n=5,
-            )
-            ctx.processed_data["corpus.chunks"].write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        extras_cold["corpus_pipeline_e2e"] = runs[0]
-        extras["corpus_pipeline_e2e"] = runs[1]
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: corpus pipeline failed: {exc}", file=sys.stderr)
-        extras_failed["corpus_pipeline_e2e"] = str(exc)
-
-    # Events analytics Pipeline end-to-end (sessionize -> attribution ->
-    # outliers -> time-weighted avg -> report) over the events table; the
-    # report step's bounded aggregates are the terminal actions, so the
-    # e2e time covers every composed frame.
-    try:
-        from meshinsights_data_pipeline_spark.analytics.events_pipeline import (
-            build_events_pipeline,
-        )
-        from meshinsights_data_pipeline_spark.core.context import (
-            PipelineContext,
-        )
-        from meshinsights_data_pipeline_spark.session import read_table
-
-        ev_raw = read_table(spark, sf_dir, "events")
-        pipe = build_events_pipeline()
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            pipe.run(PipelineContext(
-                pipeline_name="events_analytics", correlation_id="bench",
-                raw_data=ev_raw,
-            ))
-            runs.append(round(time.perf_counter() - t0, 3))
-        extras_cold["events_pipeline_e2e"] = runs[0]
-        extras["events_pipeline_e2e"] = runs[1]
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: events pipeline failed: {exc}", file=sys.stderr)
-        extras_failed["events_pipeline_e2e"] = str(exc)
-
-    # Entity-resolution end-to-end (examples/record_linkage.py composed:
-    # blocked linkage -> connected components -> golden-record anti-join)
-    # over the customer table — a regression inside the linkage->CC
-    # composition is invisible to the per-query gates (r12 verdict #7).
-    try:
-        from pyspark.sql import functions as F
-
-        from meshinsights_data_pipeline_spark.operators.components import (
-            connected_components,
-        )
-        from meshinsights_data_pipeline_spark.operators.linkage import (
-            blocked_record_linkage,
-        )
-        from meshinsights_data_pipeline_spark.session import read_table
-
-        cust = read_table(spark, sf_dir, "customer")
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            pairs = blocked_record_linkage(
-                cust, "c_custkey", ["c_nationkey", "c_mktsegment"],
-                "c_name", "c_acctbal", numeric_scale=2000.0, threshold=0.9,
-            )
-            comp = connected_components(pairs, "id_a", "id_b")
-            losers = comp.filter(F.col("id") != F.col("cluster_id")).select(
-                F.col("id").alias("c_custkey")
-            )
-            cust.join(losers, "c_custkey", "left_anti").write.format(
-                "noop"
-            ).mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        extras_cold["record_linkage_e2e"] = runs[0]
-        extras["record_linkage_e2e"] = runs[1]
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: record linkage e2e failed: {exc}", file=sys.stderr)
-        extras_failed["record_linkage_e2e"] = str(exc)
-
-    # Temporal drift monitoring end-to-end (examples/drift_monitoring.py's
-    # core: per-user CUSUM changepoints -> alarm triage summary) — the
-    # composed plan of the x104 anchor.
-    try:
-        from pyspark.sql import functions as F
-
-        from meshinsights_data_pipeline_spark.operators.changepoint import (
-            cusum_changepoints,
-        )
-        from meshinsights_data_pipeline_spark.session import read_table
-
-        ev = read_table(spark, sf_dir, "events")
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            scored = cusum_changepoints(
-                ev, "ts", ["user_id"], "value", "event_id",
-                target=50.0, slack=12.0, threshold=95.0,
-            )
-            alarms = scored.filter(F.col("alarm_up") | F.col("alarm_down"))
-            alarms.groupBy("user_id").agg(
-                F.min("ts").alias("first_alarm"),
-                F.sum(F.col("alarm_up").cast("int")).alias("n_up"),
-                F.sum(F.col("alarm_down").cast("int")).alias("n_down"),
-            ).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        extras_cold["drift_monitoring_e2e"] = runs[0]
-        extras["drift_monitoring_e2e"] = runs[1]
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: drift monitoring e2e failed: {exc}", file=sys.stderr)
-        extras_failed["drift_monitoring_e2e"] = str(exc)
-
-    # Data-quality gate end-to-end (examples/data_quality.py's core: KS
-    # drift + Benford conformance + token entropy/Gini over three
-    # tables) — the composed plans of the x107/x109/x110 anchors.
-    try:
-        from meshinsights_data_pipeline_spark.operators.corpus import (
-            source_token_entropy,
-        )
-        from meshinsights_data_pipeline_spark.operators.dq import (
-            benford_deviation,
-        )
-        from meshinsights_data_pipeline_spark.operators.stats import ks_drift
-        from meshinsights_data_pipeline_spark.session import read_table
-
-        ev = read_table(spark, sf_dir, "events")
-        li = read_table(spark, sf_dir, "lineitem")
-        docs = read_table(spark, sf_dir, "documents")
-        # r16 optimization round — same §2.6 overlap + methodology note
-        # as stat_tests_e2e: three independent checks over three
-        # different tables; per-operator costs stay gated by
-        # x107/x109/x110.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _noop_dq(frame) -> None:
-            frame.write.format("noop").mode("overwrite").save()
-
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            frames = (
-                ks_drift(ev, "event_type", "value"),
-                benford_deviation(li, "l_returnflag", "l_extendedprice"),
-                source_token_entropy(docs, "source", "text"),
-            )
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                list(pool.map(_noop_dq, frames))
-            runs.append(round(time.perf_counter() - t0, 3))
-        extras_cold["data_quality_e2e"] = runs[0]
-        extras["data_quality_e2e"] = runs[1]
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: data quality e2e failed: {exc}", file=sys.stderr)
-        extras_failed["data_quality_e2e"] = str(exc)
-
-    # Statistical-tests end-to-end (the composed plans of the x116-x119
-    # anchors: Welch t + chi-square independence + lag-k ACF + JS mix
-    # divergence).
-    try:
-        from pyspark.sql import functions as F
-
-        from meshinsights_data_pipeline_spark.operators.abtest import (
-            mann_whitney_u,
-            welch_ttest,
-        )
-        from meshinsights_data_pipeline_spark.operators.corpus import (
-            source_js_divergence,
-        )
-        from meshinsights_data_pipeline_spark.operators.dq import (
-            chi2_independence,
-        )
-        from meshinsights_data_pipeline_spark.operators.trend import (
-            autocorrelation,
-        )
-        from meshinsights_data_pipeline_spark.session import read_table
-
-        ev = read_table(spark, sf_dir, "events")
-        orders = read_table(spark, sf_dir, "orders")
-        docs = read_table(spark, sf_dir, "documents")
-        metric = ev.select(
-            F.col("event_type").alias("exp"),
-            F.when(F.col("user_id") % 2 == 0, "control")
-            .otherwise("t1").alias("arm"),
-            F.col("value"),
-        )
-        # r16 optimization round — measurement-methodology note
-        # (OPTIMIZATION_r16.md): the five analyses are INDEPENDENT, so
-        # their actions overlap via a small thread pool (guide §2.6 —
-        # the same idiom the streaming extra's parallel_batch uses;
-        # serial-composition numbers live in the pre-r16 gate records).
-        # Each operator's own cost stays individually gated by its
-        # anchor (x116/x120/x117/x118/x119). Plans are still built
-        # inside the timed region, as before.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _noop(frame) -> None:
-            frame.write.format("noop").mode("overwrite").save()
-
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            frames = (
-                welch_ttest(metric, "exp", "arm", "value",
-                            control_label="control"),
-                mann_whitney_u(metric, "exp", "arm", "value",
-                               control_label="control"),
-                chi2_independence(orders, "o_orderstatus",
-                                  "o_orderpriority"),
-                autocorrelation(
-                    ev.filter(F.col("user_id") < 40), "ts",
-                    ["user_id"], "value", "event_id", lags=3,
-                ),
-                source_js_divergence(docs, "source", "text"),
-            )
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                list(pool.map(_noop, frames))
-            runs.append(round(time.perf_counter() - t0, 3))
-        extras_cold["stat_tests_e2e"] = runs[0]
-        extras["stat_tests_e2e"] = runs[1]
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: stat tests e2e failed: {exc}", file=sys.stderr)
-        extras_failed["stat_tests_e2e"] = str(exc)
-
-    # Judge/classifier-evaluation end-to-end (the composed plans of the
-    # x124-x130 anchors: ROC-AUC + calibration report + Cohen's kappa +
-    # Cliff's delta + bootstrap CI + SPRT decisions + CUPED).
-    try:
-        from pyspark.sql import functions as F
-
-        from meshinsights_data_pipeline_spark.operators.abtest import (
-            cliffs_delta,
-            cuped_adjusted_means,
-            sprt_bernoulli,
-        )
-        from meshinsights_data_pipeline_spark.operators.bootstrap import (
-            bootstrap_mean_ci,
-        )
-        from meshinsights_data_pipeline_spark.operators.mleval import (
-            calibration_report,
-            cohens_kappa,
-            roc_auc,
-        )
-        from meshinsights_data_pipeline_spark.session import read_table
-
-        ev = read_table(spark, sf_dir, "events")
-        docs = read_table(spark, sf_dir, "documents")
-        scored = ev.select(
-            F.col("event_type"),
-            (F.col("user_id") % 2 == 0).alias("label"),
-            F.col("value"),
-        )
-        conf = ev.select(
-            F.col("event_type"),
-            (F.col("value").cast("double") / F.lit(100.0)).alias("score"),
-            (F.col("user_id") % 3 == 0).alias("label"),
-        )
-        raters = docs.select(
-            F.col("source"),
-            F.col("lang").alias("rater_a"),
-            F.when(F.col("doc_id") % 7 == 0, F.lit("xx"))
-            .otherwise(F.col("lang")).alias("rater_b"),
-        )
-        arms = ev.select(
-            F.col("event_type").alias("experiment"),
-            F.when(F.col("user_id") % 2 == 0, "control")
-            .otherwise("t1").alias("arm"),
-            F.col("value"),
-        )
-        # r16 optimization round — same §2.6 overlap + methodology note
-        # as stat_tests_e2e: the seven evaluations are independent, their
-        # actions run through a small thread pool; per-operator costs
-        # stay gated by x124-x130. Plans still build in the timed region.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _noop_je(frame) -> None:
-            frame.write.format("noop").mode("overwrite").save()
-
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            frames = (
-                roc_auc(scored, ["event_type"], "label", "value"),
-                calibration_report(
-                    conf, ["event_type"], "score", "label", bins=10
-                ),
-                cohens_kappa(raters, ["source"], "rater_a", "rater_b"),
-                cliffs_delta(arms, "experiment", "arm", "value",
-                             control_label="control"),
-                bootstrap_mean_ci(ev, ["event_type"], "value",
-                                  "event_id", b=60),
-                sprt_bernoulli(
-                    arms.withColumn("conv", F.col("value") > 30),
-                    "experiment", "arm", "conv", p0=0.3, p1=0.35,
-                ),
-                cuped_adjusted_means(
-                    arms.withColumn(
-                        "pre_metric",
-                        F.floor(F.col("value").cast("double") / F.lit(10.0))
-                        .cast("double"),
-                    ),
-                    "experiment", "arm", "value", "pre_metric",
-                ),
-            )
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                list(pool.map(_noop_je, frames))
-            runs.append(round(time.perf_counter() - t0, 3))
-        extras_cold["judge_eval_e2e"] = runs[0]
-        extras["judge_eval_e2e"] = runs[1]
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: judge eval e2e failed: {exc}", file=sys.stderr)
-        extras_failed["judge_eval_e2e"] = str(exc)
-
-    # Sketch-profile tier (r16): the constant-memory profiling pass a
-    # 100 TB corpus runs instead of exact distinct/frequency/overlap —
-    # HLL per-source cardinality, CMS hot-token estimates over the
-    # exploded token stream, KMV pairwise source overlap — composed
-    # over sf0.1 documents and gated like the other e2e extras (the
-    # x131-x133 anchors cover correctness at sf0.01; this gates
-    # the composed cost at the bench tier).
-    try:
-        from pyspark.sql import functions as F
-
-        from meshinsights_data_pipeline_spark.operators.sketch import (
-            cms_counts,
-            cms_estimate,
-            hll_cardinality,
-            kmv_pairwise_overlap,
-        )
-        from meshinsights_data_pipeline_spark.operators.text import (
-            normalized_text,
-        )
-        from meshinsights_data_pipeline_spark.session import read_table
-
-        docs = read_table(spark, sf_dir, "documents")
-        toks = docs.filter(
-            F.col("source").isNotNull() & F.col("text").isNotNull()
-        ).select(
-            "source",
-            F.explode(
-                F.split(normalized_text(F.col("text")), " ")
-            ).alias("token"),
-        ).filter(F.col("token") != "")
-        items = (
-            toks.groupBy("token")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .orderBy(F.col("_cnt").desc(), F.col("token").asc())
-            .limit(15)
-            .select("token")
-        )
-        # r16 optimization round — same §2.6 overlap + methodology note
-        # as stat_tests_e2e: three independent sketches; correctness
-        # stays covered by the x131-x133 anchors.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _noop_sk(frame) -> None:
-            frame.write.format("noop").mode("overwrite").save()
-
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            frames = (
-                hll_cardinality(docs, ["source"], "text", p=10),
-                cms_estimate(
-                    cms_counts(toks, ["source"], "token",
-                               depth=4, width=1024),
-                    ["source"], items, "token", depth=4, width=1024,
-                ),
-                kmv_pairwise_overlap(docs, "source", "text", k=128),
-            )
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                list(pool.map(_noop_sk, frames))
-            runs.append(round(time.perf_counter() - t0, 3))
-        extras_cold["sketch_profile_e2e"] = runs[0]
-        extras["sketch_profile_e2e"] = runs[1]
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: sketch profile e2e failed: {exc}", file=sys.stderr)
-        extras_failed["sketch_profile_e2e"] = str(exc)
-
-    # Streaming tier: bounded-stream exact dedup over the documents table
-    # (one micro-batch run, availableNow) — the §2.10 throughput signal.
-    # No warm pass: a fresh checkpoint per run IS the streaming cost
-    # model (state rebuild + watermark bookkeeping), so cold is reported.
-    try:
-        import shutil
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        from meshinsights_data_pipeline_spark.session import read_table
-        from meshinsights_data_pipeline_spark.streaming import (
-            streaming_exact_dedup,
-        )
-
-        stage_dir = tempfile.mkdtemp(prefix="bench_stream_")
-        try:
-            docs = read_table(spark, sf_dir, "documents").withColumn(
-                "ts",
-                F.expr(
-                    "timestamp'2024-01-01 00:00:00' + "
-                    "make_interval(0,0,0,0,0,0,doc_id)"
-                ),
-            )
-            src = f"{stage_dir}/src"
-            docs.write.parquet(src)
-            # min of TWO cold runs, each with a FRESH checkpoint: every
-            # run still pays the full streaming cost model (state
-            # rebuild + watermark bookkeeping — the checkpoint is never
-            # reused), but the min strips the first run's one-time
-            # streaming-machinery JIT and transient host contention,
-            # which measured as a 2-15x swing on this extra while every
-            # warm query moved <10%.
-            runs = []
-            for attempt in range(2):
-                t0 = time.perf_counter()
-                stream = spark.readStream.schema(
-                    spark.read.parquet(src).schema
-                ).parquet(src)
-                out = streaming_exact_dedup(
-                    stream, "doc_id", "text", ts_col="ts"
-                )
-                q = (
-                    out.writeStream.outputMode("append")
-                    .format("noop")
-                    .option(
-                        "checkpointLocation", f"{stage_dir}/ckpt{attempt}"
-                    )
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(300)
-                runs.append(round(time.perf_counter() - t0, 3))
-            extras_cold["streaming_exact_dedup_e2e"] = runs[0]
-            extras["streaming_exact_dedup_e2e"] = min(runs)
-        finally:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: streaming dedup failed: {exc}", file=sys.stderr)
-        extras_failed["streaming_exact_dedup_e2e"] = str(exc)
-
-    # Streaming stat-ingest tier (VERDICT r14 #7, extended r16 per
-    # VERDICT r15 #5): the hashed-state JSD + entropy twins over the
-    # documents stream, and over the events stream the exact-state
-    # Mann-Whitney twin PLUS the four r15 judge-eval/uncertainty twins
-    # (AUC, calibration, Poisson-bootstrap CI, SPRT) — all five share
-    # ONE availableNow foreachBatch query, so the extra gates the full
-    # streaming statistical surface's merge-state + epoch-report
-    # plumbing at sf0.1 scale (the batch anchors x110/x119/x120/
-    # x124/x125/x128/x129 cover the shared count stages). Same cost
-    # model as the dedup extra: a fresh checkpoint per run IS the cost,
-    # min-of-2 strips one-time JIT.
-    try:
-        import shutil
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        from meshinsights_data_pipeline_spark.session import read_table
-        from meshinsights_data_pipeline_spark.sources.layout import (
-            snapshot_overwrite,
-        )
-        from meshinsights_data_pipeline_spark.streaming import (
-            parallel_batch,
-            streaming_entropy_ingest,
-            streaming_jsd_ingest,
-            streaming_mann_whitney_ingest,
-        )
-        from meshinsights_data_pipeline_spark.streaming.abtest import (
-            streaming_sprt_ingest,
-        )
-        from meshinsights_data_pipeline_spark.streaming.mleval import (
-            streaming_auc_ingest,
-            streaming_bootstrap_ingest,
-            streaming_calibration_ingest,
-        )
-
-        stage_dir = tempfile.mkdtemp(prefix="bench_statstream_")
-        try:
-            docs = read_table(spark, sf_dir, "documents")
-            # one event frame feeds all five event-side twins: the MW
-            # arms, the x124 AUC labeling, the x125 score/100 framing,
-            # the x128 bootstrap id surface, and the SPRT conversions
-            ev = read_table(spark, sf_dir, "events").select(
-                F.col("event_type").alias("experiment"),
-                F.when(F.col("user_id") % 2 == 0, "control")
-                .otherwise("t1").alias("arm"),
-                F.col("value"),
-                F.col("event_id"),
-                (F.col("user_id") % 2 == 0).alias("label"),
-                (F.col("value").cast("double") / F.lit(100.0)).alias(
-                    "score"
-                ),
-                (F.col("user_id") % 3 == 0).alias("converted"),
-            )
-            dsrc, esrc = f"{stage_dir}/docs", f"{stage_dir}/events"
-            docs.write.parquet(dsrc)
-            ev.write.parquet(esrc)
-            runs = []
-            for attempt in range(2):
-                root = f"{stage_dir}/run{attempt}"
-                t0 = time.perf_counter()
-                # seed the seven state dirs concurrently (independent
-                # tiny writes; same §2.6 overlap as the twin execution)
-                seed_schemas = {
-                    "jsd_state": "source string, _tok long, _c long",
-                    "ent_state": "source string, _tok long, _c long",
-                    "mw_state": (
-                        "experiment string, arm string, _v double, _c long"
-                    ),
-                    "auc_state": (
-                        "experiment string, _v double, _pos long, _neg long"
-                    ),
-                    "cal_state": (
-                        "experiment string, _b int, _n long, _np long,"
-                        " _ssum decimal(38,12), _rsum decimal(38,12)"
-                    ),
-                    "bs_state": (
-                        "experiment string, _b int, _s decimal(38,12),"
-                        " _n_w long, _rows long"
-                    ),
-                    "sprt_state": (
-                        "experiment string, arm string, n long, x long"
-                    ),
-                }
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=7) as seed_pool:
-                    list(seed_pool.map(
-                        lambda kv: snapshot_overwrite(
-                            spark.createDataFrame([], kv[1]),
-                            f"{root}/{kv[0]}", -1,
-                        ),
-                        seed_schemas.items(),
-                    ))
-                jsd_proc = streaming_jsd_ingest(
-                    docs, counts_dir=f"{root}/jsd_state",
-                    report_dir=f"{root}/jsd_report",
-                )
-                ent_proc = streaming_entropy_ingest(
-                    docs, counts_dir=f"{root}/ent_state",
-                    report_dir=f"{root}/ent_report",
-                )
-
-                # r16 optimization round — measurement-methodology note
-                # (OPTIMIZATION_r16.md): the independent twins sharing one
-                # micro-batch now run through streaming.parallel_batch
-                # (overlapped job chains over disjoint state dirs, the
-                # guide's §2.6 idiom) instead of back-to-back calls. The
-                # same seven twins compute the same state and reports;
-                # serial-composition numbers live in BENCH_r15.json /
-                # the pre-r16 BENCH_GATE_LOG records.
-                qd = (
-                    spark.readStream.schema(
-                        spark.read.parquet(dsrc).schema
-                    ).parquet(dsrc)
-                    .writeStream.foreachBatch(
-                        parallel_batch(jsd_proc, ent_proc)
-                    )
-                    .option("checkpointLocation", f"{root}/ckpt_docs")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                qd.awaitTermination(300)
-                mw_proc = streaming_mann_whitney_ingest(
-                    ev, cells_dir=f"{root}/mw_state",
-                    report_dir=f"{root}/mw_report",
-                )
-                auc_proc = streaming_auc_ingest(
-                    ev, "experiment", "label", "value",
-                    cells_dir=f"{root}/auc_state",
-                    report_dir=f"{root}/auc_report",
-                )
-                cal_proc = streaming_calibration_ingest(
-                    ev, "experiment", "score", "converted", bins=10,
-                    state_dir=f"{root}/cal_state",
-                    report_dir=f"{root}/cal_report",
-                )
-                bs_proc = streaming_bootstrap_ingest(
-                    ev, "experiment", "value", "event_id", b=60,
-                    state_dir=f"{root}/bs_state",
-                    report_dir=f"{root}/bs_report",
-                )
-                sprt_proc = streaming_sprt_ingest(
-                    ev, "experiment", "arm", "converted",
-                    p0=0.30, p1=0.36,
-                    cells_dir=f"{root}/sprt_state",
-                    report_dir=f"{root}/sprt_report",
-                )
-
-                qe = (
-                    spark.readStream.schema(
-                        spark.read.parquet(esrc).schema
-                    ).parquet(esrc)
-                    .writeStream.foreachBatch(
-                        parallel_batch(
-                            mw_proc, auc_proc, cal_proc, bs_proc, sprt_proc
-                        )
-                    )
-                    .option("checkpointLocation", f"{root}/ckpt_events")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                qe.awaitTermination(300)
-                runs.append(round(time.perf_counter() - t0, 3))
-            extras_cold["streaming_stat_ingest_e2e"] = runs[0]
-            extras["streaming_stat_ingest_e2e"] = min(runs)
-        finally:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: streaming stat ingest failed: {exc}", file=sys.stderr)
-        extras_failed["streaming_stat_ingest_e2e"] = str(exc)
+    extras, extras_cold, extras_failed = _run_extras(spark, sf_dir)
 
     # Per-step breakdown of the corpus pipeline (same config as the e2e
     # run). The e2e number times ONE fused plan — Catalyst collapses the
@@ -968,19 +1092,11 @@ def main() -> None:
                     f"of {len(suspects)} suspects",
                     file=sys.stderr,
                 )
-            pin_runs: dict[str, list[float]] = {
-                n: [] for n in [*ranked, *controls]
-            }
-            for _ in range(2):
-                for n in [*ranked, *controls]:  # interleaved, not banded
-                    t0 = time.perf_counter()
-                    QUERIES[n].spark(spark, sf_dir).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                    pin_runs[n].append(
-                        round(time.perf_counter() - t0, 3)
-                    )
-            pins = {n: min(v) for n, v in pin_runs.items()}
+            pin_runs = _interleaved(spark, {
+                n: _query_build(QUERIES[n], sf_dir)
+                for n in [*ranked, *controls]
+            }, rounds=2)
+            pins = {n: _best(v) for n, v in pin_runs.items()}
             ctrl_infl = []
             for c in controls:
                 base = (
@@ -988,7 +1104,7 @@ def main() -> None:
                     or prev_queries.get(c)
                     or timings.get(c)
                 )
-                if base and base > 0:
+                if base and base > 0 and pins[c] >= 0:
                     ctrl_infl.append(pins[c] / base)
             ctrl_factor = (
                 round(sorted(ctrl_infl)[len(ctrl_infl) // 2], 2)
@@ -996,14 +1112,11 @@ def main() -> None:
             )
             for n in ranked:
                 exp = expect_all.get("queries", {}).get(n)
-                base = exp or prev_queries.get(n)
-                if base and not _regressed(pins[n], base):
-                    verdict = "cleared-by-pin"
+                verdict = _pin_verdict(
+                    pins[n], exp or prev_queries.get(n), ctrl_factor
+                )
+                if verdict == "cleared-by-pin":
                     query_regressions.pop(n, None)
-                elif ctrl_factor is not None and ctrl_factor >= 1.5:
-                    verdict = f"host-inflated (controls {ctrl_factor}x)"
-                else:
-                    verdict = "regressed"
                 adjudication[n] = {
                     "sample": timings.get(n),
                     "pin": pins[n],
@@ -1045,122 +1158,18 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001 - must not kill the bench
         print(f"bench: self-adjudication failed: {exc}", file=sys.stderr)
 
-    # sf1 scaling row: run the 10 slowest queries (by this run's warm
-    # timings) against a 10x-scaled dataset, turning the "would this plan
-    # survive 10x?" audit into a measured curve — sf1_ratio ~10 is linear
-    # in data (ideal for scan-bound work), >>10 means a superlinear
-    # shuffle/pair blowup that 100 TB would amplify. The scaled tables are
-    # derived from sf0.1 with content perturbed per copy (alphabet-rotated
-    # text, rotated embeddings, shifted keys) so self-join/dedup queries
-    # see realistic density instead of a 10-identical-copies pair
-    # explosion. Cached under /tmp across runs; disable: SPARK_GRAFT_SF1=0.
+    # The sf1 row runs at sf0.1 only; the 10x tables are cached under
+    # /tmp across runs. Disable: SPARK_GRAFT_SF1=0.
     sf1_timings: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and abs((sf or 0) - 0.1) < 1e-9:
-        try:
-            from bench_sf1 import ensure_sf1, run_sf1
-
-            # every query at >=1.0s warm (not just the top 10): r9's top-10
-            # cutoff left a 1.2-1.8s band (x46/x07/x29/q47/x52) with no 10x
-            # measurement, exactly where a superlinear surprise could hide;
-            # r10's 18-query cap cut off at 1.47s, leaving the 1.2-1.45s
-            # band (x33/x10/x39/q47/x53/x55/x77/x37) unmeasured — VERDICT
-            # r10 item 8 widened the band floor and cap.
-            # Floor of 10, cap of 26 to bound the row's wall time.
-            by_time = [
-                n for n, _ in sorted(timings.items(), key=lambda kv: -kv[1])
-                if timings[n] >= 0
-            ]
-            n_band = sum(1 for n in by_time if timings[n] >= 1.0)
-            slowest = by_time[: max(10, min(n_band, 26))]
-            # x12's scaling claim (auto-bits LSH ~linear in N) is graded
-            # by its measured ratio — always include it in the sf1 row
-            if "x12_embedding_neardup_lsh" not in slowest:
-                slowest.append("x12_embedding_neardup_lsh")
-            sf1_dir = ensure_sf1(spark, sf_dir)
-            sf1_timings = run_sf1(spark, QUERIES, slowest, sf1_dir)
-        except Exception as exc:  # noqa: BLE001
-            print(f"bench: sf1 scaling row failed: {exc}", file=sys.stderr)
-
-    # The declared x12 now runs auto-bits itself (bits derived from the
-    # exact corpus count, mirrored in the oracle); this row keeps the
-    # direct operator-level measurement for continuity with r8's
-    # BENCH_DETAIL numbers.
     sf1_autobits: dict[str, float] = {}
-    if sf1_timings:
-        try:
-            from meshinsights_data_pipeline_spark.operators.similarity import (
-                embedding_neardup_pairs_lsh,
-            )
-            from meshinsights_data_pipeline_spark.session import read_table
-
-            def _autobits_sec(d: str) -> float:
-                emb = read_table(spark, d, "embeddings")
-                runs = []
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    embedding_neardup_pairs_lsh(
-                        emb, threshold=0.4, bits=4, tables=4, seed=7,
-                        target_bucket_rows=64,
-                    ).write.format("noop").mode("overwrite").save()
-                    runs.append(round(time.perf_counter() - t0, 3))
-                return min(runs[1:]) if len(runs) > 1 else runs[0]
-
-            base = _autobits_sec(sf_dir)
-            scaled = _autobits_sec(sf1_dir)
-            sf1_autobits = {
-                "sf01_sec": base,
-                "sf1_sec": scaled,
-                "ratio": round(scaled / base, 1) if base > 0 else -1.0,
-            }
-        except Exception as exc:  # noqa: BLE001
-            print(f"bench: sf1 autobits row failed: {exc}", file=sys.stderr)
-
-    # 10x curve for the corpus-pipeline STEPS (neardup_collapse is the
-    # most expensive step and its scaling was unmeasured until r9): the
-    # same per-step barriered loop over the sf1 documents; ratio ~10 is
-    # linear in data, >>10 is the x12 treatment trigger.
     sf1_steps: dict[str, dict[str, float]] = {}
-    if sf1_timings and corpus_steps:
-        try:
-            scaled_steps = _corpus_step_times(spark, sf1_dir)
-            sf1_steps = {
-                name: {
-                    "sf01_sec": corpus_steps[name],
-                    "sf1_sec": sec,
-                    "ratio": round(sec / corpus_steps[name], 1)
-                    if corpus_steps[name] > 0 else -1.0,
-                }
-                for name, sec in scaled_steps.items()
-                if name in corpus_steps
-            }
-        except Exception as exc:  # noqa: BLE001
-            print(f"bench: sf1 step scaling failed: {exc}", file=sys.stderr)
+    if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and abs((sf or 0) - 0.1) < 1e-9:
+        sf1_timings, sf1_autobits, sf1_steps = _sf1_rows(
+            spark, QUERIES, sf_dir, timings, corpus_steps
+        )
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     total_cold = round(sum(t for t in timings_cold.values() if t >= 0), 3)
-    # The driver captures only the LAST ~2000 chars of stdout and parses the
-    # final JSON line from that tail (round 3's line, with cold+warm dicts for
-    # 70 queries, overflowed it and parsed as null). So: full detail goes to
-    # BENCH_DETAIL.json + the committed BENCH_GATE_LOG.jsonl, and the LAST
-    # line is a compact headline kept safely under the tail budget.
-    # VERDICT r16 "What's wrong" #1: the pooled extras changed meaning
-    # mid-series in r16; every record now carries an explicit
-    # methodology map so no consumer can compare pooled vs serial
-    # silently. Names not listed are serial compositions.
-    extras_methodology = {
-        "pooled_threadpool3": [
-            "data_quality_e2e", "stat_tests_e2e", "judge_eval_e2e",
-            "sketch_profile_e2e",
-        ],
-        "parallel_batch": ["streaming_stat_ingest_e2e"],
-    }
-    # Every tagged name must be an extra that ran or one recorded as failed,
-    # so a renamed or dropped extra cannot leave a stale tag in the record.
-    untagged = sorted(
-        {n for ns in extras_methodology.values() for n in ns}
-        - extras.keys() - extras_failed.keys()
-    )
-    assert not untagged, f"extras_methodology names no extra: {untagged}"
     detail = {
         "metric": "declared_query_set_total",
         "value": total,
@@ -1170,7 +1179,7 @@ def main() -> None:
         "value_cold": total_cold,
         "extras": extras,
         "extras_cold": extras_cold,
-        "extras_methodology": extras_methodology,
+        "extras_methodology": extras_methodology(),
         "extras_failed": extras_failed,
         "corpus_steps": corpus_steps,
         "step_regressions": step_regressions,
@@ -1216,91 +1225,9 @@ def main() -> None:
     except OSError:
         pass
 
-    def _short(name: str) -> str:
-        # Compact-line keys only: extension queries collapse to their
-        # FULL numeric prefix ("x26_dedup_clusters_star" -> "x26",
-        # "x110_token_entropy" -> "x110") to keep the one-line JSON
-        # inside the driver's ~2000-char stdout tail. The prefix must
-        # be the whole digit run: the earlier fixed name[:3] collided
-        # three-digit queries with two-digit ones (x110/x114 -> "x11",
-        # overwriting x11's value in the committed compact record).
-        # Full names always live in BENCH_DETAIL.json.
-        if name[0] == "x" and name[1:2].isdigit():
-            i = 1
-            while i < len(name) and name[i].isdigit():
-                i += 1
-            return name[:i]
-        return name
-
-    compact = {
-        "metric": "declared_query_set_total",
-        "value": total,
-        "unit": "sec",
-        "cores": [
-            gate["effective_cores_start"], gate["effective_cores_end"]
-        ],
-        "queries": {_short(k): round(v, 2) for k, v in timings.items()},
-        "extras": {k: round(v, 2) for k, v in extras.items()},
-        # pooled/overlapped extras by SHORT tag (full map in the gate
-        # record) — the r16 methodology-seam disclosure, in-band
-        "extras_pooled": sorted(
-            n for ns in extras_methodology.values() for n in ns
-        ),
-        "corpus_steps": {k: round(v, 2) for k, v in corpus_steps.items()},
-        "sf": sf,
-    }
-    if step_regressions:
-        compact["step_regressions"] = step_regressions
-    if query_regressions:
-        compact["query_regressions"] = query_regressions
-    if extra_regressions:
-        compact["extra_regressions"] = extra_regressions
-    if adjudication:
-        compact["adjudication"] = {
-            _short(k): v["verdict"] for k, v in adjudication.items()
-        }
-    if sf1_timings:
-        compact["sf1_slowest"] = {
-            _short(k): round(v, 1) for k, v in sf1_timings.items()
-        }
-    if sf1_steps:
-        compact["sf1_steps"] = {
-            k: v["ratio"] for k, v in sf1_steps.items()
-        }
-    # Budget 1500 chars, not the driver's full ~2000: the tail window
-    # may be combined with trailing stderr/log noise, and the whole
-    # compact line must sit INSIDE it (the r13 tail started mid-JSON —
-    # the parsed block survived, but the record was not a clean line).
-    # Shed order: corpus_steps, extras, then per-query times shrink to
-    # the slowest-N that fit (with explicit queries_shown/_total
-    # markers — no silent truncation; full detail is always in
-    # BENCH_DETAIL.json + BENCH_GATE_LOG.jsonl).
-    _BUDGET = 1500
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > _BUDGET:
-        compact.pop("corpus_steps", None)
-        line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > _BUDGET:
-        compact.pop("extras", None)
-        compact.pop("extras_pooled", None)
-        line = json.dumps(compact, separators=(",", ":"))
-    n_show = 60
-    by_desc = sorted(timings.items(), key=lambda kv: -kv[1])
-    while len(line) > _BUDGET and n_show >= 10:
-        compact["queries"] = {
-            _short(k): round(v, 2) for k, v in by_desc[:n_show]
-        }
-        compact["queries_shown"] = min(n_show, len(timings))
-        compact["queries_total"] = len(timings)
-        # VERDICT r16 "What's wrong" #2: a query absent from a
-        # truncated compact record is NOT dropped — it ran faster than
-        # this cutoff (the slowest unshown timing). Full per-query
-        # dicts are always in BENCH_DETAIL.json + BENCH_GATE_LOG.jsonl.
-        if len(timings) > n_show:
-            compact["shown_cutoff"] = round(by_desc[n_show][1], 2)
-        line = json.dumps(compact, separators=(",", ":"))
-        n_show -= 10
-    print(line)
+    print(_compact_line(
+        detail, [gate["effective_cores_start"], gate["effective_cores_end"]]
+    ))
 
 
 if __name__ == "__main__":

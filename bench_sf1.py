@@ -1,4 +1,4 @@
-"""10x scale-up dataset + runner for bench.py's sf1 scaling row.
+"""10x scale-up dataset for bench.py's sf1 scaling row (``bench.run_sf1``).
 
 Derives an ~sf1 dataset from the driver-provided sf0.1 tables (TESTDATA.md
 — never synthesized from scratch: every row is a transform of a real row,
@@ -41,8 +41,8 @@ from pyspark.sql import functions as F
 from meshinsights_data_pipeline_spark.session import read_table
 
 N_COPIES = 10
-_SCALED = ("documents", "embeddings", "events", "lineitem", "orders")
-_DIMS = ("region", "nation", "customer", "supplier", "part")
+SCALED = ("documents", "embeddings", "events", "lineitem", "orders")
+DIMS = ("region", "nation", "customer", "supplier", "part")
 
 
 def _rotated(s: str, i: int) -> str:
@@ -120,13 +120,13 @@ def ensure_sf1(spark: SparkSession, sf01_dir: str) -> str:
         "o_orderkey": orders.agg(F.max("o_orderkey")).first()[0] + 1,
         "_emb_dim": len(emb.select("embedding").first()[0]),
     }
-    for table in _SCALED:
+    for table in SCALED:
         df = read_table(spark, sf01_dir, table)
         copies = _copy_expr(table, df, 0, keys)
         for i in range(1, N_COPIES):
             copies = copies.unionByName(_copy_expr(table, df, i, keys))
         copies.write.mode("overwrite").parquet(f"{out}/{table}.parquet")
-    for table in _DIMS:
+    for table in DIMS:
         src = f"{sf01_dir}/{table}.parquet"
         dst = f"{out}/{table}.parquet"
         if os.path.isdir(src):
@@ -139,53 +139,4 @@ def ensure_sf1(spark: SparkSession, sf01_dir: str) -> str:
         f"bench: sf1 dataset built in {time.perf_counter() - t0:.1f}s at {out}",
         file=sys.stderr,
     )
-    return out
-
-
-def run_sf1(
-    spark: SparkSession, queries, names: list[str], sf1_dir: str
-) -> dict[str, float]:
-    """Min of TWO timed noop-write runs per query at sf1 — the same
-    steady-state discipline as the warm sf0.1 pass, so the published
-    ratio measures the PLAN on 10x data, not first-run state.
-
-    The tables are page-cache-warmed first: without this, whichever
-    query the roster happens to order FIRST pays the whole dataset's
-    cold read and shows a phantom 2x — the r11 'x26 sf1 doubled' and
-    r12 'x23 sf1 doubled' moves were exactly this, flipping with the
-    roster order, not plan regressions. One full scan per table makes
-    every ratio measure compute, matching the warm sf0.1 numerator.
-
-    The second timed pass exists because a query's FIRST sf1 run can
-    carry a one-time codegen surcharge — AQE picks different physical
-    plans at 10x data, so the sf0.1 warm pass's compiled code doesn't
-    apply (x23 min-label CC: first sf1 run 10.0s, steady-state 4.6s;
-    x26 star: 8.9 first vs 4.2 steady — the r12 verdict's two-figures
-    discrepancy). That surcharge is JVM work, constant in data size —
-    noise at a real 10x/100x scale step — so min-of-2 is the honest
-    scaling figure (r12 verdict #3). Runs as two full passes (pass 1
-    warms every roster plan, pass 2 is steady) rather than
-    back-to-back per query, so pass 2 can't ride pass 1's still-warm
-    executor-local shuffle files for the same stage boundaries."""
-    for t in (*_SCALED, *_DIMS):
-        try:
-            read_table(spark, sf1_dir, t).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as exc:  # noqa: BLE001 - warm-up must not kill bench
-            print(f"bench: sf1 warm-up {t} failed: {exc}", file=sys.stderr)
-    out: dict[str, float] = {}
-    for _pass in range(2):
-        for name in names:
-            try:
-                t0 = time.perf_counter()
-                queries[name].spark(spark, sf1_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                sec = round(time.perf_counter() - t0, 3)
-                prev = out.get(name)
-                out[name] = sec if prev is None or prev < 0 else min(prev, sec)
-            except Exception as exc:  # noqa: BLE001 - record, keep benching
-                print(f"bench: sf1 {name} failed: {exc}", file=sys.stderr)
-                out.setdefault(name, -1.0)
     return out

@@ -241,30 +241,6 @@ def _capped_pair_counts(
     )
 
 
-def _low_df_shingles(sh: DataFrame, max_doc_freq: int) -> DataFrame:
-    """Semi-join ``sh`` (distinct ``(id, h)`` rows) to the hashes whose
-    doc frequency is <= ``max_doc_freq`` — the shared df-cap for the
-    exact pairwise joins. A shingle in F docs contributes F(F-1)/2
-    candidate rows to a self-join and no discrimination, so the cap
-    removes exactly the hot buckets; both the aggregate and the
-    semi-join shuffle on the same hash key the self-join needs anyway.
-
-    Deliberately NOT a materialize() barrier: the low-df hash set is
-    recomputed per self-join side, but an interleaved 3x A/B at sf0.1
-    (cache build + unpersist included) measured 2.76s vs 2.74s — a
-    wash, because the df aggregate rides the same hash-keyed exchange
-    as the join itself. The diamond barrier stays reserved for frames
-    whose recompute replays a corpus scan (see operators/barrier.py).
-    """
-    low_df = (
-        sh.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") <= int(max_doc_freq))
-        .select("h")
-    )
-    return sh.join(low_df, "h", "left_semi")
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,

@@ -28,26 +28,16 @@ from pyspark.sql import functions as F
 from meshinsights_data_pipeline_spark.operators.barrier import materialize as _materialize
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Double-precision sequential dot product (left fold — deterministic,
-    bit-identical to DuckDB's list arithmetic on DOUBLE[])."""
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
 def _dot_d(a: Column, b: Column) -> Column:
-    """Dot product over ALREADY-double arrays (no per-element cast) —
-    identical values to _dot, used on pre-cast pair sides."""
+    """Sequential dot product over ALREADY-double arrays (no per-element
+    cast; left fold — deterministic, bit-identical to DuckDB's list
+    arithmetic on DOUBLE[]), used on pre-cast pair sides."""
     prods = F.zip_with(a, b, lambda x, y: x * y)
     return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
 
 
 def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-
-
-def cosine_score(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _prep(df: DataFrame, id_col: str, vec_col: str, prefix: str, dim: int | None = None) -> DataFrame:

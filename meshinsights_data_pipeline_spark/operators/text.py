@@ -32,18 +32,6 @@ def token_count(col: Column | str) -> Column:
     return F.when(c == "", F.lit(0)).otherwise(F.size(F.split(c, r"\s+")))
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """Sub-word-ish token count: splits on whitespace AND punctuation and
-    counts number/word fragments — a cheap regex proxy for BPE token counts
-    (useful for budget estimation, not exact tokenizer parity)."""
-    c = _c(col)
-    return F.size(F.regexp_extract_all(c, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0)))
-
-
-def char_count(col: Column | str) -> Column:
-    return F.length(_c(col))
-
-
 #: Exactly the complement of the regex class [^A-Za-z0-9\s]: ASCII
 #: alphanumerics plus Java's \s set [ \t\n\x0B\f\r] (ASCII-only by
 #: default in java.util.regex). Enumerable, so `translate` — a char-table

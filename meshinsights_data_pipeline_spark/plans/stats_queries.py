@@ -1954,12 +1954,6 @@ ORDER BY experiment, arm
 """
 
 
-# normalized_text() twin (lowercase, non-alphanumeric runs -> one space)
-_NORM = (
-    "trim(regexp_replace(lower({col}), '[^a-z0-9]+', ' ', 'g'))"
-)
-
-
 def x131_hll_cardinality(spark: SparkSession, sf_dir: str):
     """Per-source HLL approximate COUNT(DISTINCT text) at p=8 (m=256
     registers — constant state per source vs the corpus-keyed shuffle
@@ -2080,7 +2074,7 @@ def _x132_sql() -> str:
     consts = ", ".join(
         f"({r}, {a_r[r]}, {c_r[r]})" for r in range(depth)
     )
-    norm = _NORM.format(col="text")
+    norm = _NORM_SQL.format(col="text")
     h = _H60_SQL.format(s="token")
     return f"""
 WITH toks AS (
